@@ -138,6 +138,20 @@ def test_auth_validator():
     )
     assert v("u", "p") and not v("u", "x") and not v("x", "p")
     assert grafana.basic_auth_validator({"enabled": False})("any", "thing")
+    # same-length wrong password
+    v = grafana.basic_auth_validator(
+        {"enabled": True, "username": "admin", "password": "hunter2"}
+    )
+    assert v("admin", "hunter2") and not v("admin", "hunter3")
+    # non-ASCII secrets are compared as UTF-8 bytes, never as str
+    v = grafana.basic_auth_validator(
+        {"enabled": True, "username": "zoë", "password": "pässwörd"}
+    )
+    assert v("zoë", "pässwörd")
+    assert not v("zoë", "passwörd") and not v("zoe", "pässwörd")
+    # a missing configured credential matches nothing, not even None/""
+    v = grafana.basic_auth_validator({"enabled": True, "username": "u"})
+    assert not v("u", "") and not v("u", "None")
 
 
 def _post(port, path, payload, auth=None):

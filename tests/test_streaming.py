@@ -6,9 +6,12 @@ cutoff (:273)."""
 from __future__ import annotations
 
 import json
+import logging
+from datetime import datetime
 
 import pytest
 
+from timeseries_data_provider_spark.streaming import ingest
 from timeseries_data_provider_spark.streaming.config import SourceConfig
 from timeseries_data_provider_spark.streaming.ingest import (
     MetricsCollector,
@@ -68,7 +71,7 @@ def test_cadence_and_ingest(spark, tmp_path):
     assert ts == [1_700_000_000 + t for t in range(6)]
 
 
-def test_null_sample_dropped_and_failure_isolated(spark, tmp_path):
+def test_null_sample_dropped_and_failure_isolated(spark, tmp_path, caplog):
     sources = [
         SourceConfig(name="ok", interval=1),
         SourceConfig(name="nullv", interval=1),  # body lacks the path
@@ -80,10 +83,15 @@ def test_null_sample_dropped_and_failure_isolated(spark, tmp_path):
         "boom": RuntimeError("connection refused"),
     }
     c, _ = _collector(spark, tmp_path, sources, responses)
-    written = c.tick(tick_time=1_700_000_000)
+    with caplog.at_level(logging.WARNING, logger=ingest.__name__):
+        written = c.tick(tick_time=1_700_000_000)
     assert written == 1  # only 'ok'; null dropped, failure isolated
     df = read_metrics(spark, str(tmp_path / "metrics"))
     assert [r["name"] for r in df.collect()] == ["ok"]
+    logged = [r for r in caplog.records if r.name == ingest.__name__]
+    assert [r.levelno for r in logged] == [logging.WARNING]
+    assert "boom" in logged[0].getMessage()
+    assert "connection refused" in logged[0].getMessage()
 
 
 def test_custom_transform(spark, tmp_path):
@@ -94,6 +102,59 @@ def test_custom_transform(spark, tmp_path):
     c.tick(tick_time=1_700_000_000)
     df = read_metrics(spark, str(tmp_path / "metrics"))
     assert df.collect()[0]["value"] == 3.25
+
+
+def test_tick_appends_without_parallelize(spark, tmp_path, monkeypatch):
+    """A tick hands its batch to Spark as an Arrow table, so it never
+    pickles rows through ``SparkContext.parallelize``."""
+    from pyspark import SparkContext
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("tick went through SparkContext.parallelize")
+
+    monkeypatch.setattr(SparkContext, "parallelize", refuse)
+    src = SourceConfig(name="s", interval=1)
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 4.0})})
+    assert c.tick(tick_time=1_700_000_000) == 1
+    monkeypatch.undo()
+    rows = read_metrics(spark, str(tmp_path / "metrics")).collect()
+    assert [(r["name"], r["value"]) for r in rows] == [("s", 4.0)]
+
+
+def _subsecond_ticks(spark, path):
+    """Two ticks at a sub-second epoch with an int-valued extract;
+    returns the landed (name, time, value) rows in time order."""
+    src = SourceConfig(name="s", interval=1, transform=lambda body: int(body))
+    c = MetricsCollector(spark, [src], path, fetcher=lambda s: "7")
+    c.tick(tick_time=1_700_000_000.123456)
+    c.tick(tick_time=1_700_000_001.5)
+    rows = read_metrics(spark, path).orderBy("time").collect()
+    return [(r["name"], r["time"], r["value"]) for r in rows]
+
+
+def test_tick_subsecond_time_and_int_value(spark, tmp_path):
+    got = _subsecond_ticks(spark, str(tmp_path / "metrics"))
+    # exact µs, zone-less (the tick epoch read as UTC wall time)
+    assert got == [
+        ("s", datetime(2023, 11, 14, 22, 13, 20, 123456), 7.0),
+        ("s", datetime(2023, 11, 14, 22, 13, 21, 500000), 7.0),
+    ]
+    assert all(type(v) is float for _, _, v in got)
+    schema = read_metrics(spark, str(tmp_path / "metrics")).schema
+    assert schema["time"].dataType.typeName() == "timestamp_ntz"
+
+
+def test_tick_time_independent_of_session_timezone(spark, tmp_path):
+    utc = _subsecond_ticks(spark, str(tmp_path / "utc"))
+    key = "spark.sql.session.timeZone"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        la = _subsecond_ticks(spark, str(tmp_path / "la"))
+    finally:
+        spark.conf.set(key, prior)
+    assert spark.conf.get(key) == "UTC"
+    assert la == utc
 
 
 def test_retention_strict_cutoff(spark, tmp_path):

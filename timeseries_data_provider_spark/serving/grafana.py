@@ -26,6 +26,7 @@ by construction.
 
 from __future__ import annotations
 
+import hmac
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -203,6 +204,16 @@ def tag_values(_payload: dict | None = None) -> list:
     return []
 
 
+def _same_secret(given: str, configured: Any) -> bool:
+    """Constant-time equality on UTF-8 bytes (``compare_digest`` refuses
+    non-ASCII ``str``); a missing configured value never matches."""
+    if not isinstance(configured, str):
+        return False
+    return hmac.compare_digest(
+        given.encode("utf-8"), configured.encode("utf-8")
+    )
+
+
 def basic_auth_validator(config: dict[str, Any]):
     """Credential check factory (index.js:20-26). ``config`` mirrors
     ``config.server.auth`` — {enabled, username, password}."""
@@ -210,9 +221,10 @@ def basic_auth_validator(config: dict[str, Any]):
     def validate(username: str, password: str) -> bool:
         if not config.get("enabled", False):
             return True
-        return (
-            username == config.get("username")
-            and password == config.get("password")
-        )
+        # both fields are always compared, so timing does not tell
+        # which one was wrong
+        user_ok = _same_secret(username, config.get("username"))
+        pass_ok = _same_secret(password, config.get("password"))
+        return user_ok and pass_ok
 
     return validate

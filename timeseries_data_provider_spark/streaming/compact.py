@@ -8,8 +8,10 @@ matters. Compaction rewrites a partition's many small files into a few
 time-sorted ones; time-sorting also gives parquet row-group min/max
 stats their pruning power for range scans.
 
-Run cadence: piggy-back on the retention due-check — i.e. INSIDE the
-collector's tick, serialized with appends. CONCURRENCY CONTRACT
+Run cadence: the collector never calls it. ``compact_all`` is a
+maintenance call the operator runs, and it must still be serialized
+with ingestion — between ticks or with the collector stopped, never
+beside a running one. CONCURRENCY CONTRACT
 (review finding, same as retention.py): the swap is crash-atomic but
 NOT safe against a concurrent writer — a file appended between the
 rewrite's scan and the rename is swept away with the old directory.

@@ -15,6 +15,9 @@ Mapping (SURVEY.md §3.2):
 - writePoints with no timestamp (index.js:250-257) → append of
   ``(name, time=now, value)`` — ingest-time stamping preserved, so
   event-time == processing-time and late data cannot exist (SURVEY §1.1).
+  The tick's samples are built column by column into a ``pyarrow.Table``
+  that Spark turns into a DataFrame in the JVM: no Python worker runs
+  on a tick, and Spark stays the only parquet writer.
 - autoRemove (index.js:268-282) → retention due-check in the same tick,
   strict ``<`` cutoff (see retention.py).
 
@@ -26,13 +29,16 @@ other series.
 
 from __future__ import annotations
 
+import logging
 import time as _time
 import urllib.request
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -51,6 +57,11 @@ METRICS_SCHEMA = StructType(
         StructField("value", DoubleType(), False),
     ]
 )
+# the NTZ time maps to a zone-less µs timestamp, so no session timezone
+# touches it on the way into Spark
+_ARROW_SCHEMA = to_arrow_schema(METRICS_SCHEMA)
+
+log = logging.getLogger(__name__)
 
 
 def default_fetcher(source: SourceConfig) -> str:
@@ -101,7 +112,8 @@ class MetricsCollector:
     def tick(self, tick_time: float | None = None) -> int:
         """Run one tick; returns number of samples written."""
         t = self.now() if tick_time is None else tick_time
-        rows: list[tuple[str, datetime, float]] = []
+        names: list[str] = []
+        values: list[float] = []
         for source in self.sources:
             st = self.state.get(source.name)
             if st is None:
@@ -113,12 +125,10 @@ class MetricsCollector:
                     body = self.fetcher(source)
                     value = source.extract(body)
                     if value is not None:  # null guard, index.js:246
-                        ts = datetime.fromtimestamp(t, tz=timezone.utc).replace(
-                            tzinfo=None
-                        )
-                        rows.append((source.name, ts, float(value)))
+                        names.append(source.name)
+                        values.append(float(value))
                 except Exception as exc:  # isolation, index.js:259-263
-                    print(f"[collector] {source.name}: {exc}")
+                    log.warning("collector: %s: %s", source.name, exc)
             # retention due-check (index.js:269)
             if (
                 source.remove_interval
@@ -135,16 +145,21 @@ class MetricsCollector:
                         now_epoch=t,
                     )
                 except Exception as exc:
-                    print(f"[retention] {source.name}: {exc}")
-        if rows:
-            batch = self.spark.createDataFrame(rows, METRICS_SCHEMA)
+                    log.warning("retention: %s: %s", source.name, exc)
+        if names:
+            ts = datetime.fromtimestamp(t, tz=timezone.utc).replace(tzinfo=None)
+            table = pa.Table.from_pydict(
+                {"name": names, "time": [ts] * len(names), "value": values},
+                schema=_ARROW_SCHEMA,
+            )
+            batch = self.spark.createDataFrame(table, METRICS_SCHEMA)
             (
                 batch.coalesce(1)
                 .write.mode("append")
                 .partitionBy("name")
                 .parquet(self.table_path)
             )
-        return len(rows)
+        return len(names)
 
     # -- streaming driver ------------------------------------------------
 

@@ -28,7 +28,7 @@ import shutil
 import uuid
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -57,16 +57,19 @@ def apply_retention(
     if not os.path.isdir(part_dir):
         return 0
     cutoff = retention_cutoff(age_seconds, now_epoch)
+    # the write fills the survivor count: no second job re-reads tmp_dir
+    observed = Observation()
     survivors = (
         spark.read.parquet(part_dir)
         .filter(F.col("time") >= F.lit(cutoff).cast("timestamp_ntz"))
+        .observe(observed, F.count(F.lit(1)).alias("n"))
         .coalesce(1)
     )
     tmp_dir = os.path.join(
         os.path.dirname(table_path), f".retention-{name}-{uuid.uuid4().hex}"
     )
     survivors.write.mode("overwrite").parquet(tmp_dir)
-    n = spark.read.parquet(tmp_dir).count()
+    n = observed.get["n"]
     # swap via rename-aside: old data is renamed out of the way, the new
     # partition renamed in, and only THEN is the old data deleted — a
     # crash at any point leaves either the old or the new data intact

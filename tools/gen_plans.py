@@ -1,15 +1,29 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: annotated explain('formatted') output for the
-headline queries at sf0.01 (see PLANS.md header)."""
+"""Capture explain('formatted') output of the declared queries.
+
+With no arguments, regenerate PLANS.md: the annotated headline queries
+at sf0.01 (see PLANS.md header).
+
+With ``--out-dir DIR``, dump the raw plan of every declared query
+(``NON_BENCH`` excluded) to ``DIR/<query>_<suffix>.txt`` instead, read
+at ``--sf`` (default ``$SPARK_GRAFT_SF_DIR``, the data bench.py times).
+Positional FILTERs keep only queries whose name contains one of them.
+A before/after pair around a change:
+
+    python tools/gen_plans.py --out-dir plans/q02 --suffix before q02
+    python tools/gen_plans.py --out-dir plans/q02 --suffix after q02
+"""
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 NOTES = {
     "q02_range_scan_ms": "Range scan: predicates on the raw int64-nanos column reach the parquet scan (PushedFilters), series filter prunes; only (value, ts) read.",
@@ -27,12 +41,14 @@ NOTES = {
 }
 
 
-def main() -> None:
-    from timeseries_data_provider_spark.session import get_spark
+def explain(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
 
-    import __spark_entry__ as entry
 
-    spark = get_spark("plans", cpus=8, shuffle_partitions=8)
+def write_plans_md(spark, qs) -> None:
     sf = "/root/testdata/sf0.01"
     out = [
         "# PLANS — physical-plan audit of headline queries",
@@ -43,23 +59,64 @@ def main() -> None:
         "regression guards.",
         "",
     ]
-    qs = entry.queries()
     for name, note in NOTES.items():
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            qs[name](spark, sf).explain("formatted")
         keep = [
             (l[:197] + "...") if len(l) > 200 else l
-            for l in buf.getvalue().splitlines()
+            for l in explain(qs[name](spark, sf)).splitlines()
         ]
         out.append(
             f"## {name}\n\n{note}\n\n```\n" + "\n".join(keep[:80]) + "\n```\n"
         )
-    with open(
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "PLANS.md"),
-        "w",
-    ) as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
+
+
+def dump_plans(spark, qs, skip, out_dir, suffix, sf, filters) -> None:
+    os.makedirs(out_dir, exist_ok=True)
+    for name in sorted(qs):
+        if name in skip or (filters and not any(f in name for f in filters)):
+            continue
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(explain(qs[name](spark, sf)))
+        print(f"wrote {path}")
+
+
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--out-dir", help="dump raw plans here instead of PLANS.md")
+    ap.add_argument("--suffix", default="before", help="plan file name suffix")
+    ap.add_argument(
+        "--sf",
+        default=os.environ.get("SPARK_GRAFT_SF_DIR"),
+        help="data directory for --out-dir dumps",
+    )
+    ap.add_argument("filters", nargs="*", help="query name substrings")
+    args = ap.parse_args(argv)
+    if args.filters and not args.out_dir:
+        ap.error("query filters apply only with --out-dir")
+    if args.out_dir and not args.sf:
+        ap.error("--out-dir needs --sf or $SPARK_GRAFT_SF_DIR")
+
+    from timeseries_data_provider_spark.session import get_spark
+
+    import __spark_entry__ as entry
+
+    qs = entry.queries()
+    if args.out_dir:
+        spark = get_spark("plans")
+        dump_plans(
+            spark,
+            qs,
+            set(getattr(entry, "NON_BENCH", ())),
+            args.out_dir,
+            args.suffix,
+            args.sf,
+            args.filters,
+        )
+    else:
+        spark = get_spark("plans", cpus=8, shuffle_partitions=8)
+        write_plans_md(spark, qs)
     spark.stop()
 
 
