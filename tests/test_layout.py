@@ -4,6 +4,7 @@ skew joins — the write-side half of the 100 TB story."""
 from __future__ import annotations
 
 import io
+import os
 from contextlib import redirect_stdout
 from datetime import datetime
 
@@ -39,8 +40,9 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
     before_rows = sorted(
         r["time"] for r in read_metrics(spark, path).collect()
     )
-    results = compact_all(spark, path, target_files=1)
+    results = compact_all(spark, path)
     assert results["s"][0] >= 12 and results["s"][1] == 1
+    assert ".swap" not in os.listdir(path)  # the swap finished
     after_rows = sorted(
         r["time"] for r in read_metrics(spark, path).collect()
     )

@@ -139,6 +139,37 @@ def test_sketch_verdict_queries_hash_scorable(spark):
     assert {r["event_type"]: (r["p50"], r["p90"]) for r in vp} == exact_p
 
 
+def test_sketch_verdicts_keeps_null_group(spark):
+    """q36 joins its two aggregates NULL-safely, so a NULL event_type
+    group matches the single-aggregate form instead of vanishing."""
+    from timeseries_data_provider_spark.operators import aggregates
+
+    ev = spark.createDataFrame(
+        [
+            (et, u % 4, float(u))
+            for et in ("click", None)
+            for u in range(1, 21)
+        ],
+        "event_type string, user_id long, value double",
+    )
+    want = ev.groupBy("event_type").agg(
+        F.countDistinct("user_id").alias("exact_users"),
+        F.round(F.expr("percentile(value, 0.5D)"), 6).alias("p50"),
+        F.round(F.expr("percentile(value, 0.9D)"), 6).alias("p90"),
+    )
+    got = aggregates.sketch_verdicts(ev).collect()
+
+    def keyed(rows):
+        cols = ("event_type", "exact_users", "p50", "p90")
+        return sorted(
+            (tuple(r[c] for c in cols) for r in rows),
+            key=lambda t: (t[0] is None, t[0] or ""),
+        )
+
+    assert keyed(got) == keyed(want.collect())
+    assert len(got) == 2
+
+
 def test_pack_sequences_budget_invariant(spark):
     docs = _docs(spark)
     budget = 512

@@ -1,5 +1,5 @@
-"""EWMA (grouped pandas UDF), streaming stateful EWMA, JSON snapshot
-sink."""
+"""EWMA (grouped pandas UDF), streaming stateful EWMA, LTTB
+downsampling, gap fill."""
 
 from __future__ import annotations
 
@@ -78,28 +78,6 @@ def test_streaming_ewma_state_across_batches(spark, tmp_path):
     write([("cpu", datetime(2024, 1, 1, 0, 0, 1), 20.0)])
     out2 = run_once()
     assert out2["cpu"] == (2, 15.0)  # 0.5*20 + 0.5*10
-
-
-def test_json_snapshot_roundtrip(spark, tmp_path):
-    from timeseries_data_provider_spark.serving.snapshot import (
-        read_snapshot_series,
-        write_json_snapshot,
-    )
-    from timeseries_data_provider_spark.streaming.ingest import METRICS_SCHEMA
-
-    rows = [
-        ("cpu", datetime(2024, 1, 1, 0, 0, s), float(s)) for s in range(20)
-    ] + [("mem", datetime(2024, 1, 1, 0, 0, 0), 1.0)]
-    metrics = spark.createDataFrame(rows, METRICS_SCHEMA)
-    out = str(tmp_path / "snap")
-    write_json_snapshot(metrics, out, n=5)
-
-    cpu = read_snapshot_series(out, "cpu")
-    # last 5 points only, time-ascending, ms ints
-    assert [r["value"] for r in cpu] == [15.0, 16.0, 17.0, 18.0, 19.0]
-    assert cpu[0]["ms"] == 1704067215000
-    assert read_snapshot_series(out, "mem")[0]["value"] == 1.0
-    assert read_snapshot_series(out, "ghost") == []
 
 
 def test_lttb_downsample(spark):

@@ -1,17 +1,21 @@
 """Grafana wire-contract tests (SURVEY.md §5 item 4): golden shapes for
 /search, timeseries and table responses, epoch-ms ints, stubs, auth,
 unknown-target drop, multi-table union (divergence from reference defect
-index.js:131), end-to-end over real HTTP."""
+index.js:131), end-to-end over real HTTP, bounded request bodies."""
 
 from __future__ import annotations
 
 import json
+import socket
 import urllib.request
 
 import pytest
 
 from timeseries_data_provider_spark.serving import grafana
-from timeseries_data_provider_spark.serving.http_server import serve
+from timeseries_data_provider_spark.serving.http_server import (
+    MAX_BODY_BYTES,
+    serve,
+)
 
 
 @pytest.fixture(scope="module")
@@ -126,12 +130,6 @@ def test_epoch_ms_range_bounds(metrics):
         assert grafana.handle_query(p, metrics, known_series={"cpu"}) == iso
 
 
-def test_stubs():
-    assert grafana.annotations() == []
-    assert grafana.tag_keys() == []
-    assert grafana.tag_values() == []
-
-
 def test_auth_validator():
     v = grafana.basic_auth_validator(
         {"enabled": True, "username": "u", "password": "p"}
@@ -191,8 +189,8 @@ def test_http_end_to_end(metrics):
         assert code == 200
         assert body[0]["target"] == "cpu"
         assert body[0]["datapoints"][0] == [2.0, 1704067202000]
-        code, body = _post(port, "/annotations", {}, auth="u:p")
-        assert (code, body) == (200, [])
+        for stub in ("/annotations", "/tag-keys", "/tag-values"):
+            assert _post(port, stub, {}, auth="u:p") == (200, [])
         # malformed body → 500 with an error message (divergence 2)
         req = urllib.request.Request(
             f"http://127.0.0.1:{port}/query",
@@ -210,5 +208,30 @@ def test_http_end_to_end(metrics):
         except urllib.error.HTTPError as e:
             raised = e.code == 500 and "error" in json.loads(e.read())
         assert raised
+    finally:
+        server.shutdown()
+
+
+def _raw_status(port, content_length):
+    """POST /query with a hand-written Content-Length and no body;
+    returns the status code the server answers with."""
+    with socket.create_connection(("127.0.0.1", port), timeout=10) as sock:
+        sock.sendall(
+            b"POST /query HTTP/1.1\r\nHost: x\r\n"
+            b"Content-Length: " + content_length.encode() + b"\r\n\r\n"
+        )
+        status_line = sock.makefile("rb").readline()
+    return int(status_line.split()[1])
+
+
+def test_content_length_bounded(metrics):
+    server, _ = serve(metrics, {"cpu"})
+    port = server.server_address[1]
+    try:
+        # refused before any read: a negative length used to block on
+        # rfile.read(-1) until the client hung up, a non-integer gave 500
+        assert _raw_status(port, "-1") == 400
+        assert _raw_status(port, "abc") == 400
+        assert _raw_status(port, str(MAX_BODY_BYTES + 1)) == 413
     finally:
         server.shutdown()

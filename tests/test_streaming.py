@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import logging
+import os
 from datetime import datetime
 
 import pytest
@@ -173,6 +174,9 @@ def test_retention_strict_cutoff(spark, tmp_path):
     df = read_metrics(spark, path)
     ts = sorted(r["time"].timestamp() for r in df.collect())
     assert ts == [now + 2, now + 3, now + 4]
+    # a finished swap leaves no aside copy, in the table or beside it
+    assert ".swap" not in os.listdir(path)
+    assert os.listdir(tmp_path) == ["metrics"]
 
 
 def test_retention_via_scheduler(spark, tmp_path):
@@ -189,6 +193,41 @@ def test_retention_via_scheduler(spark, tmp_path):
     # retention last fired at t=+6 with age=2 → strict <, +4 survives
     assert ts[0] >= now + 4
     assert ts[-1] == now + 6
+
+
+def test_swap_crash_recovered_on_collector_start(spark, tmp_path, monkeypatch):
+    """A crash between the swap's two renames leaves the series aside;
+    the next collector start renames the old copy back."""
+    src = SourceConfig(name="s", interval=1)
+    now = 1_700_000_000
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    for t in range(4):
+        c.tick(tick_time=now + t)
+    path = str(tmp_path / "metrics")
+    before = sorted(read_metrics(spark, path).collect())
+
+    real_rename = os.rename
+    calls: list[str] = []
+
+    def rename(src_path, dst_path):
+        # the process dies at the second rename: nothing after it runs
+        calls.append(src_path)
+        if len(calls) >= 2:
+            raise OSError("injected crash")
+        real_rename(src_path, dst_path)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        apply_retention(spark, path, "s", age_seconds=1, now_epoch=now + 3)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(path, "name=s"))
+
+    MetricsCollector(spark, [src], path)
+    assert sorted(read_metrics(spark, path).collect()) == before
+    assert ".swap" not in os.listdir(path)
+    # recovery on a table that does not exist does nothing
+    MetricsCollector(spark, [src], str(tmp_path / "absent"))
+    assert not os.path.exists(tmp_path / "absent")
 
 
 def test_streaming_smoke(spark, tmp_path):

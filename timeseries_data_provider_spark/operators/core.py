@@ -65,7 +65,7 @@ def epoch_ms(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# O5/O6 — /search: active-source filter + name projection
+# O6 — /search: name projection
 
 
 def search_series(events: DataFrame) -> DataFrame:
@@ -76,12 +76,6 @@ def search_series(events: DataFrame) -> DataFrame:
     is a distinct projection of the series-name column.
     """
     return events.select(F.col("event_type").alias("name")).distinct()
-
-
-def active_sources(sources: DataFrame) -> DataFrame:
-    """Config filter: active sources with a positive interval
-    (index.js:215-217 ``p.active === true && p.interval > 0``)."""
-    return sources.filter(F.col("active") & (F.col("interval") > 0))
 
 
 # ---------------------------------------------------------------------------

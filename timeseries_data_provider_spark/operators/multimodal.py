@@ -78,14 +78,6 @@ META_SCHEMA = StructType(
     ]
 )
 
-FRAME_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("frame_idx", LongType()),
-        StructField("frame_byte_offset", LongType()),
-    ]
-)
-
 FRAME_META_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -2084,31 +2076,6 @@ def resize_features(
     return media.select("doc_id", "payload").mapInPandas(
         feats, RESIZED_SCHEMA
     )
-
-
-def sample_frames(blobs: DataFrame, frame_size: int = 64) -> DataFrame:
-    """Frame-sampling plumbing: one output row per fixed-size 'frame' of
-    the payload (a video decoder would emit keyframes). mapInPandas with
-    a fan-out schema — demonstrates the 1→N multimodal explode path."""
-
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, offs = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = max(1, len(payload) // frame_size)
-                for i in range(n_frames):
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    offs.append(i * frame_size)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_byte_offset": pd.Series(offs, dtype="int64"),
-                }
-            )
-
-    return blobs.mapInPandas(frames, FRAME_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = StructType(

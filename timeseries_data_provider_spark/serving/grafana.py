@@ -6,7 +6,7 @@ Endpoints (reference routes):
 - ``/search``      → active series names (index.js:72-84)
 - ``/query``       → range query, timeseries/table shapes (index.js:86-157)
 - ``/annotations`` ``/tag-keys`` ``/tag-values`` → ``[]`` stubs
-  (index.js:159-181)
+  (index.js:159-181), answered by http_server.py
 - Basic Auth validator (index.js:20-26, wired :55-61)
 
 Deliberate divergences from reference defects (SURVEY.md §4.3):
@@ -19,9 +19,8 @@ Deliberate divergences from reference defects (SURVEY.md §4.3):
    index.js:29-31 + :103).
 
 Spark is not a low-latency point-query server; the intended deployment
-keeps the metrics frame cached (or a JSON-sink snapshot) and bounds
-every response by ``maxDataPoints`` — driver-side collect() is capped
-by construction.
+keeps the metrics frame cached and bounds every response by
+``maxDataPoints`` — driver-side collect() is capped by construction.
 """
 
 from __future__ import annotations
@@ -32,8 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.core import epoch_ms as _core_epoch_ms
-from ..operators.core import query_range
+from ..operators.core import epoch_ms, query_range
 
 # Fixed table-shape column metadata (index.js:142-146).
 TABLE_COLUMNS = [
@@ -41,27 +39,6 @@ TABLE_COLUMNS = [
     {"text": "Value", "type": "number"},
     {"text": "Time", "type": "time"},
 ]
-
-
-def search(sources_or_events: DataFrame) -> list[str]:
-    """`/search`: active source names (index.js:76-83)."""
-    df = sources_or_events
-    if "active" in df.columns:
-        df = df.filter(F.col("active"))
-        name_col = "name"
-    else:
-        name_col = "event_type" if "event_type" in df.columns else "name"
-    return [
-        r[0]
-        for r in df.select(name_col).distinct().orderBy(name_col).collect()
-    ]
-
-
-def _epoch_ms(col: F.Column) -> F.Column:
-    # THE scored conversion (operators/core.epoch_ms, index.js:121-123)
-    # — not a local re-implementation, so serving cannot silently
-    # diverge from the driver-scored operator (review finding).
-    return _core_epoch_ms(col)
 
 
 def _range_bound(raw: Any, default: str) -> str:
@@ -92,9 +69,6 @@ def handle_query(
     payload: dict[str, Any],
     metrics: DataFrame,
     known_series: set[str] | None = None,
-    series_col: str = "name",
-    time_col: str = "time",
-    value_col: str = "value",
 ) -> list[dict[str, Any]]:
     """`/query` (index.js:86-157).
 
@@ -140,28 +114,16 @@ def handle_query(
     # interchangeable).
     from pyspark.sql import Window
 
-    df = query_range(
-        metrics,
-        names,
-        t_from,
-        t_to,
-        None,
-        series_col=series_col,
-        time_col=time_col,
-        value_col=value_col,
-    )
+    # METRICS_SCHEMA's series and time columns
+    df = query_range(metrics, names, t_from, t_to, None, "name", "time")
     if max_points is not None:
-        w = Window.partitionBy(series_col).orderBy(time_col, value_col)
+        w = Window.partitionBy("name").orderBy("time", "value")
         df = (
             df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= max_points)
             .drop("__rn")
         )
-    union = df.select(
-        F.col(series_col).alias("name"),
-        F.col(value_col).alias("value"),
-        _epoch_ms(F.col(time_col)).alias("ms"),
-    )
+    union = df.select("name", "value", epoch_ms(F.col("time")))
 
     grouped: dict[str, list[list[Any]]] = {n: [] for n in names}
     for row in union.collect():
@@ -187,21 +149,6 @@ def handle_query(
             {"columns": TABLE_COLUMNS, "rows": table_rows, "type": "table"}
         )
     return response
-
-
-def annotations(_payload: dict | None = None) -> list:
-    """Stub (index.js:159-165)."""
-    return []
-
-
-def tag_keys(_payload: dict | None = None) -> list:
-    """Stub (index.js:167-173)."""
-    return []
-
-
-def tag_values(_payload: dict | None = None) -> list:
-    """Stub (index.js:175-181)."""
-    return []
 
 
 def _same_secret(given: str, configured: Any) -> bool:

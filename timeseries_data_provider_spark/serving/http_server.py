@@ -10,20 +10,22 @@ import base64
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
 
 from . import grafana
+
+# the reference's stub routes (index.js:159-181) always answer []
+STUB_ROUTES = ("/annotations", "/tag-keys", "/tag-values")
+# largest request body read; a longer one is refused unread
+MAX_BODY_BYTES = 1 << 20
 
 
 def make_handler(
     metrics: DataFrame,
     known_series: set[str],
     auth_config: dict[str, Any] | None = None,
-    series_col: str = "name",
-    time_col: str = "time",
-    value_col: str = "value",
 ):
     validate = grafana.basic_auth_validator(auth_config or {"enabled": False})
 
@@ -53,11 +55,6 @@ def make_handler(
             self.end_headers()
             self.wfile.write(data)
 
-        def _payload(self) -> dict:
-            n = int(self.headers.get("Content-Length", 0) or 0)
-            raw = self.rfile.read(n) if n else b"{}"
-            return json.loads(raw or b"{}")
-
         def do_GET(self) -> None:
             if not self._authorized():
                 return self._send(401, {"error": "unauthorized"})
@@ -69,27 +66,25 @@ def make_handler(
             if not self._authorized():
                 return self._send(401, {"error": "unauthorized"})
             try:
-                payload = self._payload()
+                n = int(self.headers.get("Content-Length", 0) or 0)
+            except ValueError:
+                n = -1
+            if n < 0:
+                return self._send(400, {"error": "invalid Content-Length"})
+            if n > MAX_BODY_BYTES:
+                return self._send(413, {"error": "request body too large"})
+            try:
+                raw = self.rfile.read(n) if n else b""
+                payload = json.loads(raw or b"{}")
                 if self.path == "/search":
                     return self._send(200, sorted(known_series))
                 if self.path == "/query":
                     return self._send(
                         200,
-                        grafana.handle_query(
-                            payload,
-                            metrics,
-                            known_series,
-                            series_col=series_col,
-                            time_col=time_col,
-                            value_col=value_col,
-                        ),
+                        grafana.handle_query(payload, metrics, known_series),
                     )
-                if self.path == "/annotations":
-                    return self._send(200, grafana.annotations(payload))
-                if self.path == "/tag-keys":
-                    return self._send(200, grafana.tag_keys(payload))
-                if self.path == "/tag-values":
-                    return self._send(200, grafana.tag_values(payload))
+                if self.path in STUB_ROUTES:
+                    return self._send(200, [])
                 self._send(404, {"error": "not found"})
             except Exception as exc:
                 # divergence 2: real error response, not a swallowed
@@ -104,11 +99,10 @@ def serve(
     known_series: set[str],
     port: int = 0,
     auth_config: dict[str, Any] | None = None,
-    **cols,
 ) -> tuple[ThreadingHTTPServer, threading.Thread]:
     """Start the server on a background thread; returns (server,
     thread). ``server.server_address[1]`` is the bound port."""
-    handler = make_handler(metrics, known_series, auth_config, **cols)
+    handler = make_handler(metrics, known_series, auth_config)
     server = ThreadingHTTPServer(("127.0.0.1", port), handler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()

@@ -9,30 +9,8 @@ as get_json_object) with an optional Python callable escape hatch.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Callable
-
-from pyspark.sql import SparkSession
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-SOURCES_SCHEMA = StructType(
-    [
-        StructField("name", StringType(), False),
-        StructField("active", BooleanType(), False),
-        StructField("interval", IntegerType(), False),
-        StructField("remove_interval", IntegerType(), True),
-        StructField("remove_age", IntegerType(), True),
-        StructField("method", StringType(), True),
-        StructField("url", StringType(), True),
-    ]
-)
-
 
 @dataclass
 class SourceConfig:
@@ -92,19 +70,3 @@ def _json_path_steps(path: str) -> list:
             steps.append(int(i))
     return steps
 
-
-def sources_df(spark: SparkSession, sources: list[SourceConfig]):
-    """The config as a small DataFrame (broadcast dimension, O7)."""
-    rows = [
-        (
-            s.name,
-            s.active,
-            s.interval,
-            s.remove_interval,
-            s.remove_age,
-            s.method,
-            s.url,
-        )
-        for s in sources
-    ]
-    return spark.createDataFrame(rows, SOURCES_SCHEMA)

@@ -48,7 +48,7 @@ from pyspark.sql.types import (
 )
 
 from .config import SourceConfig
-from .retention import apply_retention
+from .retention import apply_retention, recover_swaps
 
 METRICS_SCHEMA = StructType(
     [
@@ -106,6 +106,8 @@ class MetricsCollector:
             for s in sources
             if s.active and s.interval > 0
         }
+        # a swap cut off between its two renames left the series aside
+        recover_swaps(table_path)
 
     # -- one scheduler tick (index.js:226-284) ---------------------------
 

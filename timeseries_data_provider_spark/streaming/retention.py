@@ -5,20 +5,26 @@
 
 On plain parquet (no Delta in this container) a delete is a partition
 rewrite: read ONLY the series' partition, keep survivors
-(``time >= cutoff``), atomically swap the partition directory. Writes
-never touch other series — the same partition pruning that serves
-queries bounds maintenance I/O. On Delta/Iceberg this whole module
-collapses to ``DELETE FROM metrics WHERE name = ? AND time < ?``.
+(``time >= cutoff``), swap the partition directory. Writes never touch
+other series — the same partition pruning that serves queries bounds
+maintenance I/O. On Delta/Iceberg this whole module collapses to
+``DELETE FROM metrics WHERE name = ? AND time < ?``.
 
-CONCURRENCY CONTRACT (review finding): the swap is crash-ATOMIC (old
-or new visible at any instant) but NOT safe against a concurrent
-WRITER — a file appended to the partition between the rewrite's scan
-and the rename is swept into the retired dir and deleted. Retention
-must therefore run serialized with ingestion: the collector calls it
-from inside its own tick (the reference's single setInterval loop,
-index.js:268-282, has the same property by construction). Plain
-parquet has no transaction log to detect the race; Delta/Iceberg is
-the lift when maintenance must run out-of-band.
+The swap (``_swap_partition``, shared with compact.py) is NOT atomic:
+between its two renames the series is briefly invisible to readers. A
+crash in that window leaves the old copy aside under
+``<table>/.swap/``; ``recover_swaps`` renames it back, and the
+collector runs it on start. Restoring the old copy is always correct
+because retention and compaction are re-runnable.
+
+CONCURRENCY CONTRACT (review finding): the swap is NOT safe against a
+concurrent WRITER — a file appended to the partition between the
+rewrite's scan and the rename is swept aside with the old copy and
+deleted. Retention must therefore run serialized with ingestion: the
+collector calls it from inside its own tick (the reference's single
+setInterval loop, index.js:268-282, has the same property by
+construction). Plain parquet has no transaction log to detect the
+race; Delta/Iceberg is the lift when maintenance must run out-of-band.
 """
 
 from __future__ import annotations
@@ -28,8 +34,43 @@ import shutil
 import uuid
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+# aside copies live inside the table root: partition discovery skips
+# dot-prefixed directories, and recovery stays scoped to one table
+SWAP_DIR = ".swap"
+
+
+def recover_swaps(table_path: str) -> None:
+    """Rename back every old copy whose partition is missing (a swap
+    interrupted between its two renames), then drop ``.swap``."""
+    swap_dir = os.path.join(table_path, SWAP_DIR)
+    if not os.path.isdir(swap_dir):
+        return
+    for entry in os.listdir(swap_dir):
+        part, _tag, kind = entry.rsplit(".", 2)
+        part_dir = os.path.join(table_path, part)
+        if kind == "old" and not os.path.exists(part_dir):
+            os.rename(os.path.join(swap_dir, entry), part_dir)
+    shutil.rmtree(swap_dir)
+
+
+def _swap_partition(table_path: str, name: str, df: DataFrame) -> None:
+    """Replace series ``name``'s partition with ``df``: write the new
+    copy aside, rename the old partition aside, rename the new one in,
+    then delete the old. Recovery runs on the way out, so a failed
+    swap restores the old copy, and a finished one leaves no
+    ``.swap`` entries."""
+    entry = f"name={name}"
+    part_dir = os.path.join(table_path, entry)
+    aside = os.path.join(table_path, SWAP_DIR, f"{entry}.{uuid.uuid4().hex}")
+    try:
+        df.write.mode("overwrite").parquet(aside + ".new")
+        os.rename(part_dir, aside + ".old")
+        os.rename(aside + ".new", part_dir)
+    finally:
+        recover_swaps(table_path)
 
 
 def retention_cutoff(age_seconds: int, now_epoch: float) -> datetime:
@@ -57,7 +98,7 @@ def apply_retention(
     if not os.path.isdir(part_dir):
         return 0
     cutoff = retention_cutoff(age_seconds, now_epoch)
-    # the write fills the survivor count: no second job re-reads tmp_dir
+    # the write fills the survivor count: no second job re-reads the copy
     observed = Observation()
     survivors = (
         spark.read.parquet(part_dir)
@@ -65,28 +106,5 @@ def apply_retention(
         .observe(observed, F.count(F.lit(1)).alias("n"))
         .coalesce(1)
     )
-    tmp_dir = os.path.join(
-        os.path.dirname(table_path), f".retention-{name}-{uuid.uuid4().hex}"
-    )
-    survivors.write.mode("overwrite").parquet(tmp_dir)
-    n = observed.get["n"]
-    # swap via rename-aside: old data is renamed out of the way, the new
-    # partition renamed in, and only THEN is the old data deleted — a
-    # crash at any point leaves either the old or the new data intact
-    # (rmtree-then-rename had a window where the partition was gone and
-    # survivors stranded in a hidden tmp dir, ADVICE r1). Both aside
-    # dirs live outside table_path so partition discovery never sees
-    # them.
-    old_dir = os.path.join(
-        os.path.dirname(table_path), f".retired-{name}-{uuid.uuid4().hex}"
-    )
-    os.rename(part_dir, old_dir)
-    os.rename(tmp_dir, part_dir)
-    shutil.rmtree(old_dir)
-    # drop _SUCCESS marker files inside a partition dir — they confuse
-    # partition discovery on subsequent reads of the root table
-    for marker in ("_SUCCESS",):
-        p = os.path.join(part_dir, marker)
-        if os.path.exists(p):
-            os.remove(p)
-    return n
+    _swap_partition(table_path, name, survivors)
+    return observed.get["n"]
