@@ -228,8 +228,8 @@ def test_content_length_bounded(metrics):
     server, _ = serve(metrics, {"cpu"})
     port = server.server_address[1]
     try:
-        # refused before any read: a negative length used to block on
-        # rfile.read(-1) until the client hung up, a non-integer gave 500
+        # refused before any read: rfile.read(-1) would block until the
+        # client hangs up
         assert _raw_status(port, "-1") == 400
         assert _raw_status(port, "abc") == 400
         assert _raw_status(port, str(MAX_BODY_BYTES + 1)) == 413

@@ -6,7 +6,10 @@ Endpoints (reference routes):
 - ``/search``      → active series names (index.js:72-84)
 - ``/query``       → range query, timeseries/table shapes (index.js:86-157)
 - ``/annotations`` ``/tag-keys`` ``/tag-values`` → ``[]`` stubs
-  (index.js:159-181), answered by http_server.py
+  (index.js:159-181)
+
+``handle_query`` and the auth validator live here; http_server.py
+answers ``/search`` from the known series and the stubs itself.
 - Basic Auth validator (index.js:20-26, wired :55-61)
 
 Deliberate divergences from reference defects (SURVEY.md §4.3):

@@ -142,10 +142,10 @@ def main() -> int:
         trigger_seconds=1, checkpoint_dir=str(tmp / "ckpt")
     )
     def table_stats() -> dict[str, tuple[int, object]]:
-        # the table dir only exists after the first tick's write;
-        # concurrent reads during a retention swap see either the old or
-        # the new partition, but a file can still vanish between Spark's
-        # listing and its read — treat both as transient reader retries
+        # the table dir only exists after the first tick's write; a
+        # read during a retention swap can miss the series between the
+        # swap's two renames, and a file can vanish between Spark's
+        # listing and its read — treat all as transient reader retries
         try:
             return {
                 r["name"]: (r["n"], r["t0"])
