@@ -14,6 +14,7 @@ import pytest
 from timeseries_data_provider_spark.serving import grafana
 from timeseries_data_provider_spark.serving.http_server import (
     MAX_BODY_BYTES,
+    STUB_ROUTES,
     serve,
 )
 
@@ -208,6 +209,18 @@ def test_http_end_to_end(metrics):
         except urllib.error.HTTPError as e:
             raised = e.code == 500 and "error" in json.loads(e.read())
         assert raised
+    finally:
+        server.shutdown()
+
+
+def test_stubs(metrics):
+    # the stub routes answer [] whatever the body, without Spark work
+    server, _ = serve(metrics, {"cpu"})
+    port = server.server_address[1]
+    try:
+        for stub in STUB_ROUTES:
+            assert _post(port, stub, {}) == (200, [])
+            assert _post(port, stub, {"key": "host"}) == (200, [])
     finally:
         server.shutdown()
 
