@@ -335,6 +335,21 @@ def test_audio_features_stereo_gates_on_frames(spark):
     )
 
 
+def test_empty_clip_zero_stats_but_no_mean(spark):
+    # an empty WAV has no mean square: audio_features reports zeros,
+    # media_features refuses to featurize it rather than emit NULL
+    media = spark.createDataFrame(
+        [(0, bytearray(mm.encode_wav(np.zeros(0, np.int16))))],
+        "doc_id long, payload binary",
+    )
+    row = mm.audio_features(media).collect()[0]
+    assert (
+        row.n_samples, row.peak_abs, row.zero_crossings, row.rms_milli
+    ) == (0, 0, 0, 0)
+    with pytest.raises(Exception, match="decoded to no samples"):
+        mm.media_features(media).collect()
+
+
 def test_audio_features_container_invariant(spark):
     # the SAME waveform shipped at five sample formats must gate
     # identically: features are computed in the 16-bit domain

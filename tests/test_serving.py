@@ -192,7 +192,7 @@ def test_http_end_to_end(metrics):
         assert body[0]["datapoints"][0] == [2.0, 1704067202000]
         for stub in ("/annotations", "/tag-keys", "/tag-values"):
             assert _post(port, stub, {}, auth="u:p") == (200, [])
-        # malformed body → 500 with an error message (divergence 2)
+        # malformed body → 400 with an error message (as hapi answered)
         req = urllib.request.Request(
             f"http://127.0.0.1:{port}/query",
             data=b"{not json",
@@ -207,7 +207,7 @@ def test_http_end_to_end(metrics):
             urllib.request.urlopen(req)
             raised = False
         except urllib.error.HTTPError as e:
-            raised = e.code == 500 and "error" in json.loads(e.read())
+            raised = e.code == 400 and "error" in json.loads(e.read())
         assert raised
     finally:
         server.shutdown()
@@ -248,3 +248,62 @@ def test_content_length_bounded(metrics):
         assert _raw_status(port, str(MAX_BODY_BYTES + 1)) == 413
     finally:
         server.shutdown()
+
+
+@pytest.fixture(scope="module")
+def port(metrics):
+    server, _ = serve(metrics, {"cpu", "mem"})
+    yield server.server_address[1]
+    server.shutdown()
+
+
+@pytest.mark.parametrize(
+    "body, code",
+    [
+        (b"{not json", 400),
+        (json.dumps([PAYLOAD]), 400),
+        (json.dumps(dict(PAYLOAD, targets="cpu")), 400),
+        (json.dumps(dict(PAYLOAD, targets=["cpu"])), 400),
+        (json.dumps(dict(PAYLOAD, range="today")), 400),
+        (json.dumps(dict(PAYLOAD, range={"from": "garbage"})), 400),
+        (json.dumps(dict(PAYLOAD, range={"to": [1]})), 400),
+        (json.dumps(dict(PAYLOAD, maxDataPoints="abc")), 400),
+        (json.dumps(dict(PAYLOAD, maxDataPoints=True)), 400),
+        (json.dumps(dict(PAYLOAD, maxDataPoints=0)), 400),
+        (json.dumps(dict(PAYLOAD, maxDataPoints=2.5)), 400),
+        (json.dumps(PAYLOAD), 200),
+    ],
+    ids=[
+        "not-json", "list-body", "string-targets", "string-target-item",
+        "string-range", "garbage-from", "list-to", "string-max",
+        "bool-max", "zero-max", "float-max", "valid",
+    ],
+)
+def test_hostile_query_body_400(port, body, code):
+    # hostile bodies are refused before any Spark job; a valid one
+    # still answers exactly as before
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}/query",
+        data=body if isinstance(body, bytes) else body.encode(),
+        method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req) as resp:
+            got = resp.status, json.loads(resp.read())
+    except urllib.error.HTTPError as e:
+        got = e.code, json.loads(e.read())
+    assert got[0] == code, got
+    if code == 400:
+        assert "error" in got[1]
+    else:
+        assert got[1] == [
+            {
+                "target": "cpu",
+                "datapoints": [
+                    [2.0, 1704067202000],
+                    [3.0, 1704067203000],
+                    [4.0, 1704067204000],
+                    [5.0, 1704067205000],
+                ],
+            }
+        ]

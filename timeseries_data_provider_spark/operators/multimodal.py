@@ -1266,6 +1266,52 @@ def feature_samples(decoded: dict) -> np.ndarray:
     )
 
 
+def audio_stats(decoded: dict) -> dict:
+    """Every per-clip audio feature, from ONE ``feature_samples`` call:
+    ``n_samples``; ``feat_milli``, the mean square (1000·Σs²)//n (None
+    for an empty clip, whose mean is undefined); ``peak_abs``;
+    ``zero_crossings`` (sign changes, zeros skipped); ``rms_milli``,
+    the integer-isqrt RMS in milli units. Integer math throughout, so
+    values are order-independent and oracle-hashable; the 16-bit-domain
+    normalization keeps float samples from truncating to 0/±1, and the
+    mono downmix keeps interleaved channels from gating on meaningless
+    adjacency."""
+    import math
+
+    s = feature_samples(decoded)
+    n = int(s.size)
+    sq = int((s * s).sum())
+    sgn = np.sign(s)
+    nz = sgn[sgn != 0]
+    return {
+        "n_samples": n,
+        "feat_milli": (1000 * sq) // n if n else None,
+        "peak_abs": int(np.abs(s).max()) if n else 0,
+        "zero_crossings": (
+            int((nz[1:] != nz[:-1]).sum()) if nz.size > 1 else 0
+        ),
+        "rms_milli": math.isqrt((1_000_000 * sq) // n) if n else 0,
+    }
+
+
+def image_pixels(decoded: dict) -> np.ndarray:
+    """The pixel grid of a decoded image; a metadata-only decode (no
+    pixel data) raises ValueError — features are never silently
+    NULL."""
+    if decoded["pixels"] is None:
+        raise ValueError(
+            f"{decoded['format']} payload decoded to metadata only "
+            "(no pixel data) — cannot featurize"
+        )
+    return decoded["pixels"]
+
+
+def pixel_milli(px: np.ndarray) -> int:
+    """Floor-scaled milli mean of a pixel grid, 1000·Σpx // size —
+    integer math, so exact and closed-form for planted rasters."""
+    return (1000 * int(px.sum(dtype=np.int64))) // px.size
+
+
 def decode_meta_stub(blobs: DataFrame) -> DataFrame:
     """'Decode' each payload to (width, height) metadata via mapInPandas.
 
@@ -1971,25 +2017,17 @@ def media_features(
                 payload = bytes(payload)
                 if is_audio_payload(payload):
                     wav = decode_audio(payload)
-                    # 16-bit-domain normalization + mono downmix:
-                    # float samples would otherwise TRUNCATE to 0/±1
-                    # under a raw int cast — silent garbage, exactly
-                    # what this operator's loud-errors contract
-                    # forbids — and interleaved multichannel streams
-                    # would gate on meaningless adjacency
-                    s = feature_samples(wav)
-                    n = int(s.size)
-                    feat = (1000 * int((s * s).sum())) // n
-                    meta = (None, None, n, wav["format"])
+                    st = audio_stats(wav)
+                    feat = st["feat_milli"]
+                    if feat is None:
+                        raise ValueError(
+                            f"{wav['format']} payload decoded to no "
+                            "samples — cannot featurize"
+                        )
+                    meta = (None, None, st["n_samples"], wav["format"])
                 else:
                     img = decode_image(payload)
-                    px = img["pixels"]
-                    if px is None:
-                        raise ValueError(
-                            f"{img['format']} payload decoded to metadata "
-                            "only (no pixel data) — cannot featurize"
-                        )
-                    feat = (1000 * int(px.sum(dtype=np.int64))) // px.size
+                    feat = pixel_milli(image_pixels(img))
                     meta = (img["width"], img["height"], None, img["format"])
                 rows["doc_id"].append(int(doc_id))
                 rows["kind"].append(meta[3])
@@ -2056,14 +2094,9 @@ def resize_features(
                 if is_audio_payload(payload):
                     continue  # audio — no spatial resize
                 img = decode_image(payload)
-                px = img["pixels"]
-                if px is None:
-                    raise ValueError(
-                        f"{img['format']} payload decoded to metadata "
-                        "only — cannot resize"
-                    )
-                rz = resize_nearest(px, out_w, out_h)
-                feat = (1000 * int(rz.sum(dtype=np.int64))) // rz.size
+                feat = pixel_milli(
+                    resize_nearest(image_pixels(img), out_w, out_h)
+                )
                 rows["doc_id"].append(int(doc_id))
                 rows["kind"].append(img["format"])
                 rows["width"].append(img["width"])
@@ -2109,8 +2142,6 @@ def audio_features(media: DataFrame, codec_setup=None) -> DataFrame:
     registration hook, same contract as media_features."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
         if codec_setup is not None:
             codec_setup()  # registrations live in the WORKER module
         for pdf in batches:
@@ -2120,21 +2151,13 @@ def audio_features(media: DataFrame, codec_setup=None) -> DataFrame:
                 if not is_audio_payload(payload):
                     continue
                 wav = decode_audio(payload)
-                s = feature_samples(wav)
-                n = int(s.size)
-                sgn = np.sign(s)
-                nz = sgn[sgn != 0]
-                zc = int((nz[1:] != nz[:-1]).sum()) if nz.size > 1 else 0
+                st = audio_stats(wav)
                 rows["doc_id"].append(int(doc_id))
                 rows["sample_rate"].append(int(wav["sample_rate"]))
-                rows["n_samples"].append(n)
-                rows["peak_abs"].append(int(np.abs(s).max()) if n else 0)
-                rows["zero_crossings"].append(zc)
-                rows["rms_milli"].append(
-                    int(math.isqrt((1_000_000 * int((s * s).sum())) // n))
-                    if n
-                    else 0
-                )
+                for c in (
+                    "n_samples", "peak_abs", "zero_crossings", "rms_milli"
+                ):
+                    rows[c].append(st[c])
             yield pd.DataFrame(rows)
 
     return media.select("doc_id", "payload").mapInPandas(
@@ -2170,14 +2193,13 @@ def media_all_features(
     the separate operators produces: audio rows carry NULL
     width/height/resized_feat_milli, image rows NULL
     n_samples/peak_abs/zero_crossings/rms_milli — the LEFT-join
-    shape. Every value is the same integer expression the individual
-    operators compute, so results are identical by construction (and
-    pinned against the three-pass composition in
+    shape. Every value comes from the helpers the individual
+    operators call (``audio_stats``, ``image_pixels``,
+    ``pixel_milli``, ``resize_nearest``), so results are identical by
+    construction (and pinned against the three-pass composition in
     tests/test_multimodal.py)."""
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
         if codec_setup is not None:
             codec_setup()  # registrations live in the WORKER module
         for pdf in batches:
@@ -2188,60 +2210,36 @@ def media_all_features(
                 payload = bytes(payload)
                 if is_audio_payload(payload):
                     wav = decode_audio(payload)
-                    s = feature_samples(wav)
-                    n = int(s.size)
-                    feat = (1000 * int((s * s).sum())) // n
-                    sgn = np.sign(s)
-                    nz = sgn[sgn != 0]
-                    zc = (
-                        int((nz[1:] != nz[:-1]).sum())
-                        if nz.size > 1
-                        else 0
-                    )
-                    rows["kind"].append(wav["format"])
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["n_samples"].append(n)
-                    rows["feat_milli"].append(feat)
-                    rows["peak_abs"].append(
-                        int(np.abs(s).max()) if n else 0
-                    )
-                    rows["zero_crossings"].append(zc)
-                    rows["rms_milli"].append(
-                        int(
-                            math.isqrt(
-                                (1_000_000 * int((s * s).sum())) // n
-                            )
+                    st = audio_stats(wav)
+                    if st["feat_milli"] is None:
+                        raise ValueError(
+                            f"{wav['format']} payload decoded to no "
+                            "samples — cannot featurize"
                         )
-                        if n
-                        else 0
+                    st.update(
+                        kind=wav["format"],
+                        width=None,
+                        height=None,
+                        resized_feat_milli=None,
                     )
-                    rows["resized_feat_milli"].append(None)
                 else:
                     img = decode_image(payload)
-                    px = img["pixels"]
-                    if px is None:
-                        raise ValueError(
-                            f"{img['format']} payload decoded to "
-                            "metadata only (no pixel data) — cannot "
-                            "featurize"
-                        )
-                    feat = (
-                        1000 * int(px.sum(dtype=np.int64))
-                    ) // px.size
-                    rz = resize_nearest(px, out_w, out_h)
-                    rfeat = (
-                        1000 * int(rz.sum(dtype=np.int64))
-                    ) // rz.size
-                    rows["kind"].append(img["format"])
-                    rows["width"].append(img["width"])
-                    rows["height"].append(img["height"])
-                    rows["n_samples"].append(None)
-                    rows["feat_milli"].append(feat)
-                    rows["peak_abs"].append(None)
-                    rows["zero_crossings"].append(None)
-                    rows["rms_milli"].append(None)
-                    rows["resized_feat_milli"].append(rfeat)
+                    px = image_pixels(img)
+                    st = {
+                        "kind": img["format"],
+                        "width": img["width"],
+                        "height": img["height"],
+                        "n_samples": None,
+                        "feat_milli": pixel_milli(px),
+                        "peak_abs": None,
+                        "zero_crossings": None,
+                        "rms_milli": None,
+                        "resized_feat_milli": pixel_milli(
+                            resize_nearest(px, out_w, out_h)
+                        ),
+                    }
+                for c, v in st.items():
+                    rows[c].append(v)
                 rows["doc_id"].append(int(doc_id))
                 rows["byte_len"].append(len(payload))
             yield pd.DataFrame(rows)

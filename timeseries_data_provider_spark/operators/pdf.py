@@ -3072,11 +3072,13 @@ def pdf_image_features(
     ``errors="quarantine"`` adds (err_class, err_msg) side rows for
     damaged documents instead of killing the task
     (sources/envelope.py)."""
-    import numpy as np
     import hashlib as _hashlib
 
     from timeseries_data_provider_spark.operators import (
         imagehash as _imagehash,
+    )
+    from timeseries_data_provider_spark.operators.multimodal import (
+        pixel_milli,
     )
     from timeseries_data_provider_spark.sources.envelope import (
         extraction_envelope,
@@ -3094,9 +3096,7 @@ def pdf_image_features(
                 "height": img["height"],
                 "channels": img["channels"],
                 "filter": img["filter"],
-                "pixel_milli": (
-                    (1000 * int(px.sum(dtype=np.int64))) // px.size
-                ),
+                "pixel_milli": pixel_milli(px),
                 "pixel_sha256": _hashlib.sha256(
                     px.tobytes()
                 ).hexdigest(),
@@ -3131,10 +3131,18 @@ def pdf_image_features(
     )
 
 
-def synth_scan_pdf_media(
-    docs: "DataFrame", id_col: str = "doc_id"
-) -> "DataFrame":
-    """Plant one deterministic 3-page scan PDF per doc id, every
+def scan_stripe_page(doc_id: int, w: int, h: int):
+    """Scan page 1's raster: vertical stripes of period
+    p = (doc_id%4)+1, black where (x//p)%2 == 0, at w x h."""
+    import numpy as np
+
+    p = (doc_id % 4) + 1
+    row = np.where((np.arange(w) // p) % 2 == 0, 0, 255).astype(np.uint8)
+    return np.tile(row, (h, 1))
+
+
+def scan_pdf_blob(doc_id: int) -> bytes:
+    """The deterministic 3-page scan PDF planted for ``doc_id``, every
     page's pixel content a closed form the DuckDB oracle can
     recompute with generate_series math (the q63 plant discipline):
 
@@ -3167,55 +3175,48 @@ def synth_scan_pdf_media(
       the §7.10 evaluator decodes half the corpus) — the cube
       makes the channel sum 51·(r6+g6+b6) with r6/g6/b6 the base-6
       digits, identical in both forms."""
+    import numpy as np
+
+    i = doc_id
+    page1 = scan_stripe_page(i, 64 + i % 5, 32 + i % 3)
+    ys2, xs2 = np.mgrid[0 : 20 + i % 2, 0 : 40 + i % 4]
+    page2 = ((i + xs2 + ys2) % 256).astype(np.uint8)
+    ys3, xs3 = np.mgrid[0:12, 0:24]
+    page3 = ((7 * i + xs3 + 3 * ys3) % 216).astype(np.uint8)
+    p1_kind = {
+        1: "jbig2",
+        2: "jbig2-text",
+        3: "jbig2-mmr",
+        4: "jbig2-text-huff",
+        5: "jbig2-ref",
+    }.get(i % 6, "ccitt-g4")
+    p2_kind = {
+        1: "jpx",
+        2: "jpx-jp2",
+        3: "jpx-bypass",
+        4: "jpx-opt",
+        5: "jpx-parts",
+        6: "jpx-offs",
+        7: "jpx-prec",
+    }.get(i % 8, "gray8")
+    p3_kind = "sep-cube" if i % 2 else "indexed"
+    return encode_scan_pdf(
+        [(p1_kind, page1), (p2_kind, page2), (p3_kind, page3)]
+    )
+
+
+def synth_scan_pdf_media(
+    docs: "DataFrame", id_col: str = "doc_id"
+) -> "DataFrame":
+    """Plant one deterministic 3-page scan PDF per doc id
+    (``scan_pdf_blob``: closed-form pages, codec rotations by id)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         for pdf_ in batches:
-            out = {id_col: [], "payload": []}
-            for rid in pdf_[id_col]:
-                i = int(rid)
-                p = (i % 4) + 1
-                w1, h1 = 64 + i % 5, 32 + i % 3
-                row = np.where(
-                    (np.arange(w1) // p) % 2 == 0, 0, 255
-                ).astype(np.uint8)
-                page1 = np.tile(row, (h1, 1))
-                w2, h2 = 40 + i % 4, 20 + i % 2
-                ys2, xs2 = np.mgrid[0:h2, 0:w2]
-                page2 = ((i + xs2 + ys2) % 256).astype(np.uint8)
-                ys3, xs3 = np.mgrid[0:12, 0:24]
-                page3 = ((7 * i + xs3 + 3 * ys3) % 216).astype(
-                    np.uint8
-                )
-                p1_kind = {
-                    1: "jbig2",
-                    2: "jbig2-text",
-                    3: "jbig2-mmr",
-                    4: "jbig2-text-huff",
-                    5: "jbig2-ref",
-                }.get(i % 6, "ccitt-g4")
-                p2_kind = {
-                    1: "jpx",
-                    2: "jpx-jp2",
-                    3: "jpx-bypass",
-                    4: "jpx-opt",
-                    5: "jpx-parts",
-                    6: "jpx-offs",
-                    7: "jpx-prec",
-                }.get(i % 8, "gray8")
-                p3_kind = "sep-cube" if i % 2 else "indexed"
-                out[id_col].append(i)
-                out["payload"].append(
-                    encode_scan_pdf(
-                        [
-                            (p1_kind, page1),
-                            (p2_kind, page2),
-                            (p3_kind, page3),
-                        ]
-                    )
-                )
-            yield pd.DataFrame(out)
+            ids = [int(rid) for rid in pdf_[id_col]]
+            yield pd.DataFrame(
+                {id_col: ids, "payload": [scan_pdf_blob(i) for i in ids]}
+            )
 
     from timeseries_data_provider_spark.tables import widen_for_python
 
@@ -4405,10 +4406,10 @@ def _encode_pdf_objstm(pages, title, esc) -> bytes:
     return bytes(out)
 
 
-def synth_pdf_corpus(documents: DataFrame) -> DataFrame:
-    """Deterministic two-page PDF per document (q64's pdf columns —
-    the synth_warc_corpus pattern): page 1 carries the REAL doc text
-    in one Tj, page 2 a closed-form archive line; title
+def text_pdf_blob(doc_id: int, text: str) -> bytes:
+    """The deterministic two-page PDF planted for one document (q64's
+    pdf columns — the synth_warc_corpus pattern): page 1 carries the
+    REAL doc text in one Tj, page 2 a closed-form archive line; title
     'Doc {doc_id}'. Flate-compressed, so the extractor's zlib +
     content-tokenizer paths run on every row; every extracted field
     is doc_id/text math for the oracle. The FONT rotates by doc_id
@@ -4430,33 +4431,38 @@ def synth_pdf_corpus(documents: DataFrame) -> DataFrame:
     otherwise a simple font — so the oracle hash-checks all EIGHT
     text-recovery ladders on every run; extracted text is identical
     across modes by construction."""
+    mode = doc_id % 9
+    ff3 = {4: "cff", 5: "otto", 6: "cff_ros"}.get(mode)
+    if ff3 == "cff_ros" and not all(
+        0x20 <= ord(c) <= 0x7E for c in text + f"Archive copy {doc_id}."
+    ):
+        ff3 = "cff"
+    return encode_pdf(
+        [[text], [f"Archive copy {doc_id}."]],
+        title=f"Doc {doc_id}",
+        cid=mode in (0, 1, 7, 8) or ff3 is not None,
+        cid_tounicode=mode == 0,
+        cid_fontfile3=ff3,
+        cid_encoding={7: "embedded", 8: "UniJIS-UCS2-H"}.get(mode),
+    )
+
+
+def synth_pdf_corpus(documents: DataFrame) -> DataFrame:
+    """Deterministic two-page PDF per document (``text_pdf_blob``:
+    the real doc text plus the nine-arm font rotation by doc_id)."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_ in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, text in zip(pdf_["doc_id"], pdf_["text"]):
-                doc_id = int(doc_id)
-                mode = doc_id % 9
-                ff3 = {4: "cff", 5: "otto", 6: "cff_ros"}.get(mode)
-                if ff3 == "cff_ros" and not all(
-                    0x20 <= ord(c) <= 0x7E
-                    for c in text + f"Archive copy {doc_id}."
-                ):
-                    ff3 = "cff"
-                out["doc_id"].append(doc_id)
-                out["payload"].append(
-                    encode_pdf(
-                        [[text], [f"Archive copy {doc_id}."]],
-                        title=f"Doc {doc_id}",
-                        cid=mode in (0, 1, 7, 8) or ff3 is not None,
-                        cid_tounicode=mode == 0,
-                        cid_fontfile3=ff3,
-                        cid_encoding={
-                            7: "embedded", 8: "UniJIS-UCS2-H"
-                        }.get(mode),
-                    )
-                )
-            yield pd.DataFrame(out)
+            ids = [int(doc_id) for doc_id in pdf_["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "payload": [
+                        text_pdf_blob(i, t)
+                        for i, t in zip(ids, pdf_["text"])
+                    ],
+                }
+            )
 
     from timeseries_data_provider_spark.tables import widen_for_python
 
@@ -4518,19 +4524,20 @@ def synth_pdf_chain_features(
     text_col: str = "text",
 ) -> DataFrame:
     """q64's two PDF chains fused into ONE Arrow pass (r15, guide
-    §2.4/§4): per document, synthesize the two-page text PDF (the
-    nine-arm font rotation) and the 3-page scan PDF (the JBIG2/JPX/
-    Separation codec rotations), and extract both back immediately —
-    the IDENTICAL per-row encode/extract calls the separate
-    synth_pdf_corpus + pdf_features and synth_scan_pdf_media +
-    pdf_image_features + groupBy pipelines make (equality pinned in
+    §2.4/§4): per document, build the text PDF (``text_pdf_blob``)
+    and the 3-page scan PDF (``scan_pdf_blob``) and extract both back
+    immediately with ``extract_pdf`` / ``extract_pdf_images`` — the
+    builders and extractors the separate synth_pdf_corpus +
+    pdf_features and synth_scan_pdf_media + pdf_image_features +
+    groupBy pipelines call (equality pinned in
     tests/test_pdf_images.py). The scan columns are the per-doc
     aggregate the groupBy computed: scan_pages = image count,
     scan_pxN_milli = Σ pixel_milli of page-N images (NULL when a page
     has none). Collapses four mapInPandas passes, two repartitions,
     one hash aggregate and one join into one shuffle-free pass."""
-    import numpy as np
-
+    from timeseries_data_provider_spark.operators.multimodal import (
+        pixel_milli,
+    )
     from timeseries_data_provider_spark.tables import widen_for_python
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -4545,79 +4552,18 @@ def synth_pdf_chain_features(
                 out[c] = []
             for doc_id, text in zip(pdf_[id_col], pdf_[text_col]):
                 i = int(doc_id)
-                # --- text PDF (synth_pdf_corpus + pdf_features) ---
-                mode = i % 9
-                ff3 = {4: "cff", 5: "otto", 6: "cff_ros"}.get(mode)
-                if ff3 == "cff_ros" and not all(
-                    0x20 <= ord(c) <= 0x7E
-                    for c in text + f"Archive copy {i}."
-                ):
-                    ff3 = "cff"
-                blob = encode_pdf(
-                    [[text], [f"Archive copy {i}."]],
-                    title=f"Doc {i}",
-                    cid=mode in (0, 1, 7, 8) or ff3 is not None,
-                    cid_tounicode=mode == 0,
-                    cid_fontfile3=ff3,
-                    cid_encoding={
-                        7: "embedded", 8: "UniJIS-UCS2-H"
-                    }.get(mode),
-                )
-                m = extract_pdf(blob)
+                m = extract_pdf(text_pdf_blob(i, text))
                 out["pdf_pages"].append(m["n_pages"])
                 out["pdf_title"].append(m["title"])
                 out["pdf_text"].append(m["text"])
                 out["pdf_text_chars"].append(len(m["text"]))
-                # --- scan PDF (synth_scan_pdf_media +
-                #     pdf_image_features + the q64 groupBy) ---
-                p = (i % 4) + 1
-                w1, h1 = 64 + i % 5, 32 + i % 3
-                row = np.where(
-                    (np.arange(w1) // p) % 2 == 0, 0, 255
-                ).astype(np.uint8)
-                page1 = np.tile(row, (h1, 1))
-                w2, h2 = 40 + i % 4, 20 + i % 2
-                ys2, xs2 = np.mgrid[0:h2, 0:w2]
-                page2 = ((i + xs2 + ys2) % 256).astype(np.uint8)
-                ys3, xs3 = np.mgrid[0:12, 0:24]
-                page3 = ((7 * i + xs3 + 3 * ys3) % 216).astype(
-                    np.uint8
-                )
-                p1_kind = {
-                    1: "jbig2",
-                    2: "jbig2-text",
-                    3: "jbig2-mmr",
-                    4: "jbig2-text-huff",
-                    5: "jbig2-ref",
-                }.get(i % 6, "ccitt-g4")
-                p2_kind = {
-                    1: "jpx",
-                    2: "jpx-jp2",
-                    3: "jpx-bypass",
-                    4: "jpx-opt",
-                    5: "jpx-parts",
-                    6: "jpx-offs",
-                    7: "jpx-prec",
-                }.get(i % 8, "gray8")
-                p3_kind = "sep-cube" if i % 2 else "indexed"
-                sblob = encode_scan_pdf(
-                    [
-                        (p1_kind, page1),
-                        (p2_kind, page2),
-                        (p3_kind, page3),
-                    ]
-                )
                 n_imgs = 0
                 px = {1: None, 2: None, 3: None}
-                for img in extract_pdf_images(sblob):
+                for img in extract_pdf_images(scan_pdf_blob(i)):
                     n_imgs += 1
-                    ip = img["pixels"]
-                    pm = (
-                        1000 * int(ip.sum(dtype=np.int64))
-                    ) // ip.size
                     pg = img["page"]
                     if pg in px:
-                        px[pg] = (px[pg] or 0) + pm
+                        px[pg] = (px[pg] or 0) + pixel_milli(img["pixels"])
                 out["scan_pages"].append(n_imgs)
                 out["scan_px1_milli"].append(px[1])
                 out["scan_px2_milli"].append(px[2])

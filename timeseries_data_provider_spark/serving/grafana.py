@@ -16,7 +16,8 @@ Deliberate divergences from reference defects (SURVEY.md §4.3):
 1. multiple ``table`` targets UNION their rows (the reference's
    last-writer-wins assignment at index.js:131 drops all but one);
 2. query errors produce an error payload / HTTP 500 (the reference
-   swallows them and responds nothing, index.js:153-155);
+   swallows them and responds nothing, index.js:153-155); a malformed
+   body (``BadQuery``, or not JSON) gets HTTP 400, as hapi answered;
 3. unknown or inactive targets are dropped *explicitly* (the reference
    reaches the same outcome by crashing into its catch handler,
    index.js:29-31 + :103).
@@ -29,6 +30,7 @@ keeps the metrics frame cached and bounds every response by
 from __future__ import annotations
 
 import hmac
+from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -44,28 +46,37 @@ TABLE_COLUMNS = [
 ]
 
 
+class BadQuery(ValueError):
+    """A ``/query`` body outside the SimpleJSON request shape. Raised
+    before any Spark work; the HTTP adapter answers it with 400."""
+
+
 def _range_bound(raw: Any, default: str) -> str:
     """Normalize a Grafana range bound to 'yyyy-MM-dd HH:mm:ss[.ffffff]'.
 
     Grafana sends BOTH forms depending on panel/version: ISO-8601
     strings ('2024-01-02T00:00:00.000Z') and epoch-milliseconds
     numbers (or numeric strings). moment() in the reference accepted
-    both (index.js:96-99); so do we (VERDICT r1 #9)."""
+    both (index.js:96-99); so do we (VERDICT r1 #9). Anything else
+    raises BadQuery."""
     if raw is None:
         return default
     if isinstance(raw, bool):  # bool is an int subclass — never a time
         return default
-    if isinstance(raw, (int, float)) or (
-        isinstance(raw, str) and raw.strip().lstrip("-").isdigit()
-    ):
-        from datetime import datetime, timezone
-
-        ms = int(raw)
-        dt = datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
-        # exact sub-second from integer millis (avoid float rounding)
-        dt = dt.replace(microsecond=(ms % 1000) * 1000)
-        return dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-    return str(raw).replace("T", " ").rstrip("Z")
+    try:
+        if isinstance(raw, (int, float)) or (
+            isinstance(raw, str) and raw.strip().lstrip("-").isdigit()
+        ):
+            ms = int(raw)
+            dt = datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
+            # exact sub-second from integer millis (avoid float rounding)
+            dt = dt.replace(microsecond=(ms % 1000) * 1000)
+            return dt.strftime("%Y-%m-%d %H:%M:%S.%f")
+        bound = str(raw).replace("T", " ").rstrip("Z")
+        datetime.fromisoformat(bound)  # the parser _ns_lit applies
+        return bound
+    except (ValueError, OverflowError, OSError):
+        raise BadQuery(f"unparseable range bound {raw!r}") from None
 
 
 def handle_query(
@@ -81,12 +92,31 @@ def handle_query(
     All requested series run as ONE Spark job (name IN (...) with
     partition pruning) instead of the reference's per-target fan-out
     (index.js:97-110); the collect() is the Promise.all barrier.
+
+    A body of any other shape (not an object, non-list ``targets``,
+    non-object targets or ``range``, an unparseable range bound, a
+    ``maxDataPoints`` that is not a positive integer) raises BadQuery
+    before any Spark work.
     """
+    if not isinstance(payload, dict):
+        raise BadQuery("/query body must be a JSON object")
     targets = payload.get("targets") or []
     rng = payload.get("range") or {}
+    if not isinstance(targets, list) or not all(
+        isinstance(t, dict) for t in targets
+    ):
+        raise BadQuery("targets must be a list of objects")
+    if not isinstance(rng, dict):
+        raise BadQuery("range must be an object")
     t_from = _range_bound(rng.get("from"), "1970-01-01 00:00:00")
     t_to = _range_bound(rng.get("to"), "9999-12-31 00:00:00")
     max_points = payload.get("maxDataPoints")
+    if max_points is not None and (
+        isinstance(max_points, bool)
+        or not isinstance(max_points, int)
+        or max_points < 1
+    ):
+        raise BadQuery("maxDataPoints must be a positive integer")
 
     target_types: dict[str, str] = {}
     names: list[str] = []

@@ -75,7 +75,10 @@ def make_handler(
                 return self._send(413, {"error": "request body too large"})
             try:
                 raw = self.rfile.read(n) if n else b""
-                payload = json.loads(raw or b"{}")
+                try:
+                    payload = json.loads(raw or b"{}")
+                except ValueError:  # not JSON, or not UTF-8/16/32
+                    return self._send(400, {"error": "body is not JSON"})
                 if self.path == "/search":
                     return self._send(200, sorted(known_series))
                 if self.path == "/query":
@@ -86,6 +89,8 @@ def make_handler(
                 if self.path in STUB_ROUTES:
                     return self._send(200, [])
                 self._send(404, {"error": "not found"})
+            except grafana.BadQuery as exc:
+                self._send(400, {"error": str(exc)})
             except Exception as exc:
                 # divergence 2: real error response, not a swallowed
                 # exception (reference index.js:153-155)

@@ -32,6 +32,11 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds this package, for the Python workers' path
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 # Confs that MUST hold for correctness of this engine, applied at runtime
 # so they also take effect on driver-owned sessions.
 RUNTIME_CONFS: dict[str, str] = {
@@ -64,7 +69,15 @@ BUILD_CONFS: dict[str, str] = {
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Idempotently apply RUNTIME_CONFS to an existing session."""
+    """Idempotently apply RUNTIME_CONFS to an existing session, and put
+    this package's parent directory on the Python workers' PYTHONPATH.
+
+    Workers start in the driver's cwd with pyspark's own path only, so
+    a UDF or mapInPandas closure that imports this package fails with
+    ModuleNotFoundError unless the driver happens to run from the
+    repo root. ``SparkContext.environment`` travels with every Python
+    function the session builds, so the fix reaches driver-owned
+    sessions too."""
     for k, v in RUNTIME_CONFS.items():
         try:
             if spark.conf.get(k, None) != v:
@@ -72,6 +85,10 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             # Conf not settable at runtime in this Spark build — best effort.
             pass
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_PARENT, *paths])
     return spark
 
 

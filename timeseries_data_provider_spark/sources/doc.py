@@ -216,39 +216,46 @@ def encode_doc(
     )
 
 
-def synth_doc_corpus(documents: DataFrame) -> DataFrame:
-    """Deterministic legacy .doc per document (q64's doc columns,
-    r12 late — the synth_msg_corpus pattern): the piece-table text
-    IS the source text, and the CONTAINER rotates by doc_id —
-    id%16==13 encrypts under RC4 CryptoAPI with VelvetSweatshop,
-    id%8==5 under RC4 v1.1 with the empty password — so the
-    [MS-DOC] FIB/CLX/PlcPcd walk AND the Word 97 decrypt chain
+def doc_blob(doc_id: int, text: str) -> bytes:
+    """The deterministic legacy .doc planted for one document (q64's
+    doc columns, r12 late — the synth_msg_corpus pattern): the
+    piece-table text IS the source text, and the CONTAINER rotates by
+    doc_id — id%16==13 encrypts under RC4 CryptoAPI with
+    VelvetSweatshop, id%8==5 under RC4 v1.1 with the empty password —
+    so the [MS-DOC] FIB/CLX/PlcPcd walk AND the Word 97 decrypt chain
     hash-check against the source text every round."""
+    from timeseries_data_provider_spark.sources import offcrypto
+
+    blob = encode_doc(text)
+    if doc_id % 8 != 5:
+        return blob
+    s = dict(cfb.cfb_streams(blob))
+    capi = doc_id % 16 == 13
+    ewd, etbl, _ = offcrypto.encrypt_doc_streams(
+        s["WordDocument"],
+        s["1Table"],
+        None,
+        "VelvetSweatshop" if capi else "",
+        "capi" if capi else "rc4",
+    )
+    return cfb.encode_cfb([("WordDocument", ewd), ("1Table", etbl)])
+
+
+def synth_doc_corpus(documents: DataFrame) -> DataFrame:
+    """Deterministic legacy .doc per document (``doc_blob``: the
+    source text, RC4 v1.1/CryptoAPI container rotation by doc_id)."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from timeseries_data_provider_spark.sources import offcrypto
-
         for pdf_ in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, text in zip(pdf_["doc_id"], pdf_["text"]):
-                doc_id = int(doc_id)
-                blob = encode_doc(text)
-                if doc_id % 8 == 5:
-                    s = dict(cfb.cfb_streams(blob))
-                    capi = doc_id % 16 == 13
-                    ewd, etbl, _ = offcrypto.encrypt_doc_streams(
-                        s["WordDocument"],
-                        s["1Table"],
-                        None,
-                        "VelvetSweatshop" if capi else "",
-                        "capi" if capi else "rc4",
-                    )
-                    blob = cfb.encode_cfb(
-                        [("WordDocument", ewd), ("1Table", etbl)]
-                    )
-                out["doc_id"].append(doc_id)
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+            ids = [int(doc_id) for doc_id in pdf_["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "payload": [
+                        doc_blob(i, t) for i, t in zip(ids, pdf_["text"])
+                    ],
+                }
+            )
 
     from timeseries_data_provider_spark.tables import widen_for_python
 

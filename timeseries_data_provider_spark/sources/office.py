@@ -623,12 +623,12 @@ def encode_pptx(
     return _zip_parts(parts)
 
 
-def synth_docx_corpus(documents: DataFrame) -> DataFrame:
-    """Deterministic DOCX per document (q64's docx columns — the
-    synth_pdf_corpus pattern): two paragraphs (the REAL doc text,
-    then a closed-form row marker) and a one-row two-cell table, so
-    extraction exercises runs, paragraphs AND the table walk; title
-    and creator are doc_id math for the oracle. The CONTAINER
+def docx_blob(doc_id: int, text: str) -> bytes:
+    """The deterministic DOCX planted for one document (q64's docx
+    columns — the synth_pdf_corpus pattern): two paragraphs (the REAL
+    doc text, then a closed-form row marker) and a one-row two-cell
+    table, so extraction exercises runs, paragraphs AND the table
+    walk; title and creator are doc_id math for the oracle. The CONTAINER
     rotates by doc_id (r12): id%8==3 wraps the ZIP in an Agile-
     encrypted CFB under the empty password, id%16==11 in a
     Standard-encrypted one under VelvetSweatshop (the second default
@@ -636,38 +636,45 @@ def synth_docx_corpus(documents: DataFrame) -> DataFrame:
     extraction output is identical by construction, so the oracle
     hash-checks the ENTIRE decrypt chain every round without any
     SQL change."""
+    from timeseries_data_provider_spark.sources import offcrypto
+
+    blob = encode_docx(
+        [text, f"Row {doc_id}"],
+        title=f"Doc {doc_id}",
+        creator=f"author-{doc_id % 7}",
+        table=[["k", str(doc_id)]],
+        # closed-form sub-parts (r12 late): scored when the consumer
+        # opts into extra_parts, invisible otherwise — q64 runs
+        # extra_parts=True so the header/footer/footnote/comment walk
+        # is on the oracle surface
+        headers=[f"Hdr {doc_id}"],
+        footers=[f"Ftr {doc_id}"],
+        footnotes=[f"Note {doc_id}"],
+        comments=[f"Cmt {doc_id}"],
+    )
+    if doc_id % 16 == 11:
+        return offcrypto.encrypt_ooxml(blob, "VelvetSweatshop", "standard")
+    if doc_id % 8 == 3:
+        return offcrypto.encrypt_ooxml(blob, "", "agile")
+    return blob
+
+
+def synth_docx_corpus(documents: DataFrame) -> DataFrame:
+    """Deterministic DOCX per document (``docx_blob``: the real doc
+    text, closed-form sub-parts, Agile/Standard encryption rotation
+    by doc_id)."""
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from timeseries_data_provider_spark.sources import offcrypto
-
         for pdf_ in batches:
-            out = {"doc_id": [], "payload": []}
-            for doc_id, text in zip(pdf_["doc_id"], pdf_["text"]):
-                doc_id = int(doc_id)
-                blob = encode_docx(
-                    [text, f"Row {doc_id}"],
-                    title=f"Doc {doc_id}",
-                    creator=f"author-{doc_id % 7}",
-                    table=[["k", str(doc_id)]],
-                    # closed-form sub-parts (r12 late): scored when
-                    # the consumer opts into extra_parts, invisible
-                    # otherwise — q64 runs extra_parts=True so the
-                    # header/footer/footnote/comment walk is on the
-                    # oracle surface
-                    headers=[f"Hdr {doc_id}"],
-                    footers=[f"Ftr {doc_id}"],
-                    footnotes=[f"Note {doc_id}"],
-                    comments=[f"Cmt {doc_id}"],
-                )
-                if doc_id % 16 == 11:
-                    blob = offcrypto.encrypt_ooxml(
-                        blob, "VelvetSweatshop", "standard"
-                    )
-                elif doc_id % 8 == 3:
-                    blob = offcrypto.encrypt_ooxml(blob, "", "agile")
-                out["doc_id"].append(doc_id)
-                out["payload"].append(blob)
-            yield pd.DataFrame(out)
+            ids = [int(doc_id) for doc_id in pdf_["doc_id"]]
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "payload": [
+                        docx_blob(i, t) for i, t in zip(ids, pdf_["text"])
+                    ],
+                }
+            )
 
     from timeseries_data_provider_spark.tables import widen_for_python
 
@@ -737,23 +744,21 @@ def synth_office_chain_features(
     text_col: str = "text",
 ) -> DataFrame:
     """q64's three office-family container chains fused into ONE
-    Arrow pass (r15, guide §2.4/§4): per document, synthesize the
-    DOCX (extra-parts plant + the Agile/Standard encryption
-    rotation), the Outlook .msg (PR_RTF_COMPRESSED body), and the
-    legacy .doc (RC4 v1.1/CryptoAPI rotation) and extract each back
-    immediately — the IDENTICAL per-row encode/extract calls the
-    separate synth_docx_corpus + office_features /
-    synth_msg_corpus + msg_features / synth_doc_corpus +
-    doc_features pipelines make (equality pinned in
-    tests/test_office.py), emitting their joined column set in join
-    order. Collapses six mapInPandas passes, three repartitions and
-    two joins into one shuffle-free pass; each of the three small
-    chains otherwise pays Spark's fixed per-pass cost for ~0.1 s of
-    real work."""
-    from timeseries_data_provider_spark.sources import cfb, offcrypto
+    Arrow pass (r15, guide §2.4/§4): per document, build the DOCX
+    (``docx_blob``), the Outlook .msg (``encode_msg`` with a
+    PR_RTF_COMPRESSED body) and the legacy .doc (``doc.doc_blob``)
+    and extract each back immediately with ``office_text`` /
+    ``msg_text`` / ``doc_text`` — the builders and extractors the
+    separate synth_docx_corpus + office_features / synth_msg_corpus +
+    msg_features / synth_doc_corpus + doc_features pipelines call
+    (equality pinned in tests/test_office.py), emitting their joined
+    column set in join order. Collapses six mapInPandas passes, three
+    repartitions and two joins into one shuffle-free pass; each of the
+    three small chains otherwise pays Spark's fixed per-pass cost for
+    ~0.1 s of real work."""
     from timeseries_data_provider_spark.sources.doc import (
+        doc_blob,
         doc_text,
-        encode_doc,
     )
     from timeseries_data_provider_spark.sources.msg import (
         encode_msg,
@@ -773,53 +778,20 @@ def synth_office_chain_features(
                 out[c] = []
             for doc_id, text in zip(pdf_[id_col], pdf_[text_col]):
                 doc_id = int(doc_id)
-                # --- DOCX (synth_docx_corpus + office_features) ---
-                blob = encode_docx(
-                    [text, f"Row {doc_id}"],
-                    title=f"Doc {doc_id}",
-                    creator=f"author-{doc_id % 7}",
-                    table=[["k", str(doc_id)]],
-                    headers=[f"Hdr {doc_id}"],
-                    footers=[f"Ftr {doc_id}"],
-                    footnotes=[f"Note {doc_id}"],
-                    comments=[f"Cmt {doc_id}"],
-                )
-                if doc_id % 16 == 11:
-                    blob = offcrypto.encrypt_ooxml(
-                        blob, "VelvetSweatshop", "standard"
-                    )
-                elif doc_id % 8 == 3:
-                    blob = offcrypto.encrypt_ooxml(blob, "", "agile")
-                m = office_text(blob, extra_parts=True)
+                m = office_text(docx_blob(doc_id, text), extra_parts=True)
                 out["docx_title"].append(m["title"])
                 out["docx_creator"].append(m["creator"])
                 out["docx_paras"].append(m["n_units"])
                 out["docx_tables"].append(m["n_tables"])
                 out["docx_text"].append(m["text"])
                 out["docx_chars"].append(len(m["text"]))
-                # --- .msg (synth_msg_corpus + msg_features) ---
                 mm = msg_text(
                     encode_msg(f"Msg {doc_id}", text, rtf_body=True)
                 )
                 out["msg_subject"].append(mm["subject"])
                 out["msg_text"].append(mm["text"])
                 out["msg_chars"].append(len(mm["text"]))
-                # --- legacy .doc (synth_doc_corpus + doc_features) ---
-                dblob = encode_doc(text)
-                if doc_id % 8 == 5:
-                    s = dict(cfb.cfb_streams(dblob))
-                    capi = doc_id % 16 == 13
-                    ewd, etbl, _ = offcrypto.encrypt_doc_streams(
-                        s["WordDocument"],
-                        s["1Table"],
-                        None,
-                        "VelvetSweatshop" if capi else "",
-                        "capi" if capi else "rc4",
-                    )
-                    dblob = cfb.encode_cfb(
-                        [("WordDocument", ewd), ("1Table", etbl)]
-                    )
-                dm = doc_text(dblob)
+                dm = doc_text(doc_blob(doc_id, text))
                 out["doc97_text"].append(dm["text"])
                 out["doc97_chars"].append(len(dm["text"]))
                 out[id_col].append(doc_id)

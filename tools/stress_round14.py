@@ -37,19 +37,14 @@ sys.path.insert(
 
 import numpy as np  # noqa: E402
 
+from timeseries_data_provider_spark.operators.pdf import (  # noqa: E402
+    scan_stripe_page,
+)
 from timeseries_data_provider_spark.session import get_spark  # noqa: E402
 
 
 def _emit(probe: str, **kw) -> None:
     print(json.dumps({"probe": probe, **kw}))
-
-
-def _stripes(i: int, w: int, h: int) -> np.ndarray:
-    p = (i % 4) + 1
-    row = np.where(
-        (np.arange(w) // p) % 2 == 0, 0, 255
-    ).astype(np.uint8)
-    return np.tile(row, (h, 1))
 
 
 def probe_jbig2huff() -> None:
@@ -63,7 +58,7 @@ def probe_jbig2huff() -> None:
     rows = []
     t_build = time.time()
     for i in range(n):
-        page = _stripes(i, w, h)
+        page = scan_stripe_page(i, w, h)
         blob = pdfmod.encode_scan_pdf([("jbig2-text-huff", page)])
         rows.append((i, blob))
     t_build = time.time() - t_build
@@ -77,7 +72,7 @@ def probe_jbig2huff() -> None:
     dt = time.time() - t0
     for r in out:
         i = r["doc_id"]
-        want = (1000 * int(_stripes(i, w, h).sum())) // (w * h)
+        want = (1000 * int(scan_stripe_page(i, w, h).sum())) // (w * h)
         assert r["pixel_milli"] == want, i
     _emit(
         "jbig2huff",

@@ -34,19 +34,14 @@ sys.path.insert(
 
 import numpy as np  # noqa: E402
 
+from timeseries_data_provider_spark.operators.pdf import (  # noqa: E402
+    scan_stripe_page,
+)
 from timeseries_data_provider_spark.session import get_spark  # noqa: E402
 
 
 def _emit(probe: str, **kw) -> None:
     print(json.dumps({"probe": probe, **kw}))
-
-
-def _stripes(i: int, w: int, h: int) -> np.ndarray:
-    p = (i % 4) + 1
-    row = np.where(
-        (np.arange(w) // p) % 2 == 0, 0, 255
-    ).astype(np.uint8)
-    return np.tile(row, (h, 1))
 
 
 def _run(probe, n, page_of, kind, w, h):
@@ -88,7 +83,7 @@ def _run(probe, n, page_of, kind, w, h):
 def probe_jbig2ref() -> None:
     n = int(os.environ.get("STRESS_JB2REF_N", "2000"))
     w, h = 128, 96
-    _run("jbig2ref", n, lambda i: _stripes(i, w, h),
+    _run("jbig2ref", n, lambda i: scan_stripe_page(i, w, h),
          "jbig2-ref", w, h)
 
 
