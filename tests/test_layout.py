@@ -1,5 +1,6 @@
-"""Physical-layout tests: compaction, bucketed co-located joins, salted
-skew joins — the write-side half of the 100 TB story."""
+"""Physical-layout tests: bucketed co-located joins, salted skew joins,
+clustered and sharded writes — the write-side half of the 100 TB story
+(the metrics compaction is retention's rewrite, tested with it)."""
 
 from __future__ import annotations
 
@@ -17,36 +18,6 @@ def explain_str(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
-
-
-def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    import json
-
-    from timeseries_data_provider_spark.streaming.compact import compact_all
-    from timeseries_data_provider_spark.streaming.config import SourceConfig
-    from timeseries_data_provider_spark.streaming.ingest import (
-        MetricsCollector,
-        read_metrics,
-    )
-
-    path = str(tmp_path / "metrics")
-    src = SourceConfig(name="s", interval=1)
-    c = MetricsCollector(
-        spark, [src], path, fetcher=lambda s: json.dumps({"count": 1.0})
-    )
-    for t in range(12):  # 12 ticks → 12 tiny files
-        c.tick(tick_time=1_700_000_000 + t)
-
-    before_rows = sorted(
-        r["time"] for r in read_metrics(spark, path).collect()
-    )
-    results = compact_all(spark, path)
-    assert results["s"][0] >= 12 and results["s"][1] == 1
-    assert ".swap" not in os.listdir(path)  # the swap finished
-    after_rows = sorted(
-        r["time"] for r in read_metrics(spark, path).collect()
-    )
-    assert after_rows == before_rows  # lossless
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

@@ -355,3 +355,19 @@ def test_office_chain_fused_matches_three_pipelines(spark):
     assert list(fused.columns) == list(want.columns)
     for col in fused.columns:
         assert (fused[col] == want[col]).all(), col
+
+
+def test_synthesized_zips_ignore_wall_clock(monkeypatch):
+    # two clocks 400 days apart give the same bytes: no member carries
+    # the time it was written
+    import time
+
+    from timeseries_data_provider_spark.sources import archives
+
+    def build():
+        return office.docx_blob(7, "hello"), archives.encode_epub([["p"]])
+
+    monkeypatch.setattr(time, "time", lambda: 1_700_000_000.0)
+    first = build()
+    monkeypatch.setattr(time, "time", lambda: 1_734_560_000.0)
+    assert build() == first

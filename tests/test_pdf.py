@@ -908,3 +908,13 @@ def test_cmap_hostile_shapes_and_codespace_framing():
         b"2 begincodespacerange\n<> <>\n<0000> <ffff>",
     )
     assert pdf.extract_pdf(evil)["text"] == "safe"
+
+
+def test_text_pdf_blob_every_arm_round_trips_cjk():
+    # the simple-font arms (doc_id % 9 in {2, 3}) cannot carry text
+    # outside Latin-1; every arm must still plant the text and the
+    # extractor must read it back
+    text = "日本語テキスト"
+    for doc_id in range(9):
+        got = pdf.extract_pdf(pdf.text_pdf_blob(doc_id, text))
+        assert got["text"] == f"{text}\x0cArchive copy {doc_id}.", doc_id

@@ -5,6 +5,7 @@ index.js:131), end-to-end over real HTTP, bounded request bodies."""
 
 from __future__ import annotations
 
+import base64
 import json
 import socket
 import urllib.request
@@ -161,8 +162,6 @@ def _post(port, path, payload, auth=None):
         method="POST",
     )
     if auth:
-        import base64
-
         req.add_header(
             "Authorization",
             "Basic " + base64.b64encode(auth.encode()).decode(),
@@ -174,43 +173,43 @@ def _post(port, path, payload, auth=None):
         return e.code, json.loads(e.read())
 
 
-def test_http_end_to_end(metrics):
+@pytest.fixture(scope="module")
+def auth_port(metrics):
     server, _ = serve(
         metrics,
         {"cpu", "mem"},
         auth_config={"enabled": True, "username": "u", "password": "p"},
     )
-    port = server.server_address[1]
-    try:
-        code, _ = _post(port, "/query", PAYLOAD)
-        assert code == 401  # no credentials
-        code, body = _post(port, "/search", {}, auth="u:p")
-        assert (code, body) == (200, ["cpu", "mem"])
-        code, body = _post(port, "/query", PAYLOAD, auth="u:p")
-        assert code == 200
-        assert body[0]["target"] == "cpu"
-        assert body[0]["datapoints"][0] == [2.0, 1704067202000]
-        for stub in ("/annotations", "/tag-keys", "/tag-values"):
-            assert _post(port, stub, {}, auth="u:p") == (200, [])
-        # malformed body → 400 with an error message (as hapi answered)
-        req = urllib.request.Request(
-            f"http://127.0.0.1:{port}/query",
-            data=b"{not json",
-            method="POST",
-        )
-        import base64
+    yield server.server_address[1]
+    server.shutdown()
 
-        req.add_header(
-            "Authorization", "Basic " + base64.b64encode(b"u:p").decode()
-        )
-        try:
-            urllib.request.urlopen(req)
-            raised = False
-        except urllib.error.HTTPError as e:
-            raised = e.code == 400 and "error" in json.loads(e.read())
-        assert raised
-    finally:
-        server.shutdown()
+
+def test_http_end_to_end(auth_port):
+    code, _ = _post(auth_port, "/query", PAYLOAD)
+    assert code == 401  # no credentials
+    code, body = _post(auth_port, "/search", {}, auth="u:p")
+    assert (code, body) == (200, ["cpu", "mem"])
+    code, body = _post(auth_port, "/query", PAYLOAD, auth="u:p")
+    assert code == 200
+    assert body[0]["target"] == "cpu"
+    assert body[0]["datapoints"][0] == [2.0, 1704067202000]
+    for stub in ("/annotations", "/tag-keys", "/tag-values"):
+        assert _post(auth_port, stub, {}, auth="u:p") == (200, [])
+    # malformed body → 400 with an error message (as hapi answered)
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{auth_port}/query",
+        data=b"{not json",
+        method="POST",
+    )
+    req.add_header(
+        "Authorization", "Basic " + base64.b64encode(b"u:p").decode()
+    )
+    try:
+        urllib.request.urlopen(req)
+        raised = False
+    except urllib.error.HTTPError as e:
+        raised = e.code == 400 and "error" in json.loads(e.read())
+    assert raised
 
 
 def test_stubs(metrics):
@@ -307,3 +306,58 @@ def test_hostile_query_body_400(port, body, code):
                 ],
             }
         ]
+
+
+@pytest.mark.parametrize(
+    "payload",
+    [
+        dict(PAYLOAD, range={"from": "2024-01-01 00:00:05",
+                             "to": "2024-01-01 00:00:02"}),
+        dict(PAYLOAD, targets=[{"target": "disk", "type": "timeseries"}]),
+    ],
+    ids=["from-after-to", "unknown-target"],
+)
+def test_hostile_query_answers_empty(port, payload):
+    # well-formed but empty: an inverted range selects nothing, and a
+    # target outside known_series is dropped before any Spark work
+    assert _post(port, "/query", payload) == (200, [])
+
+
+@pytest.mark.parametrize(
+    "credentials",
+    [
+        "%%%not-base64",
+        base64.b64encode(b"up").decode(),
+        base64.b64encode(b"u\xff:p\xfe").decode(),
+    ],
+    ids=["bad-base64", "no-colon", "non-utf8"],
+)
+def test_malformed_basic_auth_401(auth_port, credentials):
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{auth_port}/search",
+        data=b"{}",
+        headers={"Authorization": "Basic " + credentials},
+        method="POST",
+    )
+    with pytest.raises(urllib.error.HTTPError) as err:
+        urllib.request.urlopen(req)
+    assert err.value.code == 401
+    assert json.loads(err.value.read()) == {"error": "unauthorized"}
+
+
+def test_query_times_are_utc_under_any_session_zone(spark, metrics):
+    # /query renders stored NTZ times through the session zone; serve()
+    # must pin it, whatever zone the caller's session was left in
+    key = "spark.sql.session.timeZone"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        server, _ = serve(metrics, {"cpu"})
+        try:
+            got = _post(server.server_address[1], "/query", PAYLOAD)
+        finally:
+            server.shutdown()
+    finally:
+        spark.conf.set(key, prior)
+    assert got[0] == 200
+    assert got[1][0]["datapoints"][0] == [2.0, 1704067202000]

@@ -179,6 +179,50 @@ def test_retention_strict_cutoff(spark, tmp_path):
     assert os.listdir(tmp_path) == ["metrics"]
 
 
+def test_retention_compacts_to_one_time_sorted_file(
+    spark, tmp_path, monkeypatch
+):
+    """Retention is the compaction: one tiny file per tick goes in, one
+    time-sorted file comes out, every row kept, through a plan with a
+    local sort and no shuffle."""
+    import pyarrow.parquet as pq
+
+    from timeseries_data_provider_spark.streaming import retention
+
+    src = SourceConfig(name="s", interval=1)
+    now = 1_700_000_000
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    for t in range(12):  # 12 ticks → 12 tiny files
+        c.tick(tick_time=now + t)
+    path = str(tmp_path / "metrics")
+    part = os.path.join(path, "name=s")
+
+    def files():
+        return [f for f in os.listdir(part) if f.endswith(".parquet")]
+
+    assert len(files()) >= 12
+    before = sorted(r["time"] for r in read_metrics(spark, path).collect())
+
+    plans: list[str] = []
+    real_swap = retention.swap_dir
+
+    def swap_dir(root, entry, df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        real_swap(root, entry, df)
+
+    monkeypatch.setattr(retention, "swap_dir", swap_dir)
+    # nothing is old enough to delete: a pure compaction
+    assert apply_retention(spark, path, "s", 3600, now + 11) == 12
+    assert "Exchange" not in plans[0] and "Sort [time" in plans[0]
+
+    assert len(files()) == 1
+    assert ".swap" not in os.listdir(path)
+    after = read_metrics(spark, path).collect()
+    assert sorted(r["time"] for r in after) == before  # lossless
+    stored = pq.read_table(os.path.join(part, files()[0]))["time"].to_pylist()
+    assert stored == sorted(stored) == before
+
+
 def test_retention_via_scheduler(spark, tmp_path):
     src = SourceConfig(
         name="s", interval=1, remove_interval=3, remove_age=2
@@ -534,14 +578,22 @@ def test_source_config_extract_supports_array_paths():
     assert plain.extract('{"count": 3.5}') == 3.5
 
 
-def test_reconcile_ingest_root_heals_every_crash_gap(spark, tmp_path):
+def test_reconcile_ingest_root_heals_every_crash_gap(
+    spark, tmp_path, monkeypatch
+):
     """The at-least-once recovery loop, proven end-to-end: for EVERY
     gap between the five per-batch appends (after spans, windows,
     docs, signatures), a batch that crashes in that gap and is then
     replayed (same batch + batch_id — exactly what the streaming
     checkpoint re-offers on restart), followed by
     reconcile_ingest_root, yields a root IDENTICAL to the no-crash
-    control run — and a second reconcile pass is a no-op."""
+    control run — and a second reconcile pass is a no-op. For one gap
+    the reconcile itself dies mid-rewrite first: every row it found
+    must still be readable, and the next reconcile still heals."""
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
     from timeseries_data_provider_spark.streaming import (
         corpus_ingest as ci,
     )
@@ -587,8 +639,23 @@ def test_reconcile_ingest_root_heals_every_crash_gap(spark, tmp_path):
         (10, 2, 6)
     ]
 
+    def dying_write(self, path, *args, **kwargs):
+        # one call only: a job that dies after Overwrite has already
+        # deleted its target
+        monkeypatch.undo()
+        shutil.rmtree(path, ignore_errors=True)
+        raise RuntimeError("injected job failure")
+
     for gap in ["spans", "windows", "docs", "signatures"]:
         root = run(str(tmp_path / f"crash_{gap}"), gap)
+        if gap == "docs":
+            replayed = snap(root)
+            assert replayed != control  # there is something to rewrite
+            monkeypatch.setattr(DataFrameWriter, "parquet", dying_write)
+            with pytest.raises(RuntimeError, match="injected job failure"):
+                ci.reconcile_ingest_root(spark, root)
+            assert snap(root) == replayed
+            assert ".swap" not in os.listdir(root)
         ci.reconcile_ingest_root(spark, root)
         assert snap(root) == control, f"gap={gap}"
         again = ci.reconcile_ingest_root(spark, root)

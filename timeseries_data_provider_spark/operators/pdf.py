@@ -4430,8 +4430,11 @@ def text_pdf_blob(doc_id: int, text: str) -> bytes:
     (r15 — the code bytes ARE UTF-16BE; no font consulted),
     otherwise a simple font — so the oracle hash-checks all EIGHT
     text-recovery ladders on every run; extracted text is identical
-    across modes by construction."""
+    across modes by construction. A text outside Latin-1 cannot sit
+    in a simple font's Tj string, so it takes the ToUnicode arm."""
     mode = doc_id % 9
+    if mode in (2, 3) and any(ord(c) > 0xFF for c in text):
+        mode = 0
     ff3 = {4: "cff", 5: "otto", 6: "cff_ros"}.get(mode)
     if ff3 == "cff_ros" and not all(
         0x20 <= ord(c) <= 0x7E for c in text + f"Archive copy {doc_id}."

@@ -14,6 +14,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from ..session import ensure_runtime_confs
 from . import grafana
 
 # the reference's stub routes (index.js:159-181) always answer []
@@ -106,7 +107,10 @@ def serve(
     auth_config: dict[str, Any] | None = None,
 ) -> tuple[ThreadingHTTPServer, threading.Thread]:
     """Start the server on a background thread; returns (server,
-    thread). ``server.server_address[1]`` is the bound port."""
+    thread). ``server.server_address[1]`` is the bound port. The
+    served frame's session gets the engine's runtime confs first:
+    ``/query`` renders stored NTZ times through the session zone."""
+    ensure_runtime_confs(metrics.sparkSession)
     handler = make_handler(metrics, known_series, auth_config)
     server = ThreadingHTTPServer(("127.0.0.1", port), handler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)

@@ -32,6 +32,7 @@ __all__ = [
     "archive_members",
     "read_archive_files",
     "epub_text",
+    "zip_members",
     "encode_epub",
     "epub_features",
 ]
@@ -165,28 +166,35 @@ def epub_text(blob: bytes) -> dict:
     }
 
 
+def zip_members(members: dict[str, str]) -> bytes:
+    """Fixture writer: a deflated ZIP of ``{name: body}``. Every member
+    carries the ZIP epoch as its timestamp, so the bytes depend on the
+    contents only, never on the wall clock."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, body in members.items():
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.external_attr = 0o600 << 16  # what a bare name gets
+            zf.writestr(info, body)
+    return buf.getvalue()
+
+
 def encode_epub(chapters: list[list[str]], title: str = "Book") -> bytes:
     """Fixture writer: a minimal EPUB (mimetype + OPF + one XHTML per
     chapter, each chapter a list of paragraph strings)."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        zf.writestr("mimetype", "application/epub+zip")
-        manifest = "".join(
-            f'<item id="c{i}" href="ch{i}.xhtml"/>'
-            for i in range(len(chapters))
-        )
-        zf.writestr(
-            "content.opf",
-            f"<package><metadata><dc:title>{title}</dc:title>"
-            f"</metadata><manifest>{manifest}</manifest></package>",
-        )
-        for i, paras in enumerate(chapters):
-            body = "".join(f"<p>{p}</p>" for p in paras)
-            zf.writestr(
-                f"ch{i}.xhtml",
-                f"<html><body>{body}</body></html>",
-            )
-    return buf.getvalue()
+    manifest = "".join(
+        f'<item id="c{i}" href="ch{i}.xhtml"/>' for i in range(len(chapters))
+    )
+    members = {
+        "mimetype": "application/epub+zip",
+        "content.opf": f"<package><metadata><dc:title>{title}</dc:title>"
+        f"</metadata><manifest>{manifest}</manifest></package>",
+    }
+    for i, paras in enumerate(chapters):
+        body = "".join(f"<p>{p}</p>" for p in paras)
+        members[f"ch{i}.xhtml"] = f"<html><body>{body}</body></html>"
+    return zip_members(members)
 
 
 def epub_features(

@@ -53,7 +53,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from timeseries_data_provider_spark.sources.archives import MAX_MEMBER
+from timeseries_data_provider_spark.sources.archives import (
+    MAX_MEMBER,
+    zip_members,
+)
 
 __all__ = [
     "docx_text",
@@ -453,14 +456,6 @@ def _core_xml(title: str | None, creator: str | None) -> str:
     )
 
 
-def _zip_parts(parts: dict[str, str]) -> bytes:
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
-        for name, body in parts.items():
-            zf.writestr(name, body)
-    return buf.getvalue()
-
-
 def encode_docx(
     paragraphs: list[str],
     title: str | None = None,
@@ -551,7 +546,7 @@ def encode_docx(
             )
             + "</w:comments>"
         )
-    return _zip_parts(parts)
+    return zip_members(parts)
 
 
 def encode_xlsx(
@@ -601,7 +596,7 @@ def encode_xlsx(
             + "</sst>"
         )
     parts["docProps/core.xml"] = _core_xml(title, None)
-    return _zip_parts(parts)
+    return zip_members(parts)
 
 
 def encode_pptx(
@@ -620,7 +615,7 @@ def encode_pptx(
             f"<p:txBody>{body}</p:txBody></p:sld>"
         )
     parts["docProps/core.xml"] = _core_xml(title, None)
-    return _zip_parts(parts)
+    return zip_members(parts)
 
 
 def docx_blob(doc_id: int, text: str) -> bytes:

@@ -35,10 +35,12 @@ carries ``batch_id``, so replays are detectable, and
 unclean shutdown (or periodically as maintenance) and the root is
 restored to exactly the no-crash state — duplicate docs/signatures/
 windows/span rows collapsed, replay-artifact self-pairs dropped from
-the dup audit. The append ORDER in ``process_corpus_batch`` is chosen
-so every crash gap degrades to droppable duplicates, never silent
-loss; transactional table formats are the production hardening, out
-of scope in this container.
+the dup audit. It rewrites each changed dataset through retention's
+``swap_dir`` (write aside, then rename in), so a recovery step that
+itself dies never loses the live copy. The append ORDER in
+``process_corpus_batch`` is chosen so every crash gap degrades to
+droppable duplicates, never silent loss; transactional table formats
+are the production hardening, out of scope in this container.
 
 Reference anchor: this is the [EXT] corpus counterpart of the metrics
 ingest loop (``streaming/ingest.py``, reference index.js:225-284) —
@@ -55,6 +57,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .retention import recover_swaps, swap_dir
 
 DOC_SCHEMA = StructType(
     [
@@ -323,11 +327,15 @@ def reconcile_ingest_root(
 
     Datasets are rewritten ONLY when reconciliation changed their row
     count (each pass is one scan + one hash-aggregate per dataset —
-    no driver iteration, safe at corpus scale), via an eager
-    localCheckpoint so the overwrite never races its own scan.
+    no driver iteration, safe at corpus scale), through retention's
+    ``swap_dir``: the clean copy is written aside and renamed in, so a
+    rewrite that fails leaves the live dataset intact, and a swap cut
+    between its renames is restored by the ``recover_swaps`` this
+    function runs first. ``root`` is therefore a local path.
     Returns ``{dataset: {"before": n, "after": n}}`` for every dataset
     present. Running it twice is a no-op by construction.
     """
+    recover_swaps(root)
     rules = {
         "docs": lambda df: df.dropDuplicates(["doc_id"]),
         "signatures": lambda df: df.dropDuplicates(["doc_id"]),
@@ -366,8 +374,7 @@ def reconcile_ingest_root(
         clean = rule(df)
         after = clean.count()
         if after != before or needs_stamp:
-            clean = clean.localCheckpoint(eager=True)
-            clean.write.mode("overwrite").parquet(path)
+            swap_dir(root, name, clean)
         report[name] = {"before": before, "after": after}
     return report
 

@@ -24,8 +24,8 @@ the corpus_ingest design rule, inherited.
 
 At-least-once/replay posture: identical to corpus_ingest (the
 crawl_meta append participates in the same batch_id discipline;
-``reconcile_ingest_root(extra=["crawl_meta"])`` — see
-reconcile_crawl_root below — restores the no-crash state).
+``reconcile_crawl_root`` below restores the no-crash state, swapping
+each changed dataset instead of overwriting it).
 
 Scale shape: archive-granular parallelism (CC segments, ~1 GB each);
 everything between the scan and the dedup joins is per-row
@@ -49,6 +49,7 @@ from pyspark.sql.types import (
 from timeseries_data_provider_spark.operators import htmltext, urls
 from timeseries_data_provider_spark.sources import warc
 from timeseries_data_provider_spark.streaming import corpus_ingest
+from timeseries_data_provider_spark.streaming.retention import swap_dir
 
 __all__ = [
     "crawl_batch_to_docs",
@@ -292,9 +293,10 @@ def ingest_crawl_stream(
 
 def reconcile_crawl_root(spark: SparkSession, root: str) -> dict:
     """Replay recovery for a crawl root: the corpus reconciliation
-    plus the crawl_meta audit (duplicate (batch_id, doc_id,
-    archive_id) rows collapse). Idempotent; run after any unclean
-    shutdown."""
+    (which first recovers any interrupted swap under ``root``) plus
+    the crawl_meta audit (duplicate (batch_id, doc_id, archive_id)
+    rows collapse, rewritten through the same ``swap_dir``).
+    Idempotent; run after any unclean shutdown."""
     stats = corpus_ingest.reconcile_ingest_root(spark, root)
     path = root + "/crawl_meta"
     if not corpus_ingest._bootstrap_needed(spark, path):
@@ -303,9 +305,6 @@ def reconcile_crawl_root(spark: SparkSession, root: str) -> dict:
         before = meta.count()
         after = clean.count()
         if after != before:
-            # the corpus_ingest rewrite rule: eager localCheckpoint so
-            # the overwrite never races its own scan
-            clean = clean.localCheckpoint(eager=True)
-            clean.write.mode("overwrite").parquet(path)
+            swap_dir(root, "crawl_meta", clean)
         stats["crawl_meta"] = {"before": before, "after": after}
     return stats

@@ -1,7 +1,7 @@
 """Retention: the reference's auto-remove pass
 (/root/reference/index.js:268-282) — ``DELETE FROM "<name>" WHERE time
 < '<cutoff>'`` with cutoff = now − age seconds, UTC, strict ``<``
-(index.js:272-273).
+(index.js:272-273; the rule itself is ``core.retention_filter``).
 
 On plain parquet (no Delta in this container) a delete is a partition
 rewrite: read ONLY the series' partition, keep survivors
@@ -10,21 +10,35 @@ other series — the same partition pruning that serves queries bounds
 maintenance I/O. On Delta/Iceberg this whole module collapses to
 ``DELETE FROM metrics WHERE name = ? AND time < ?``.
 
-The swap (``_swap_partition``, shared with compact.py) is NOT atomic:
-between its two renames the series is briefly invisible to readers. A
-crash in that window leaves the old copy aside under
-``<table>/.swap/``; ``recover_swaps`` renames it back, and the
-collector runs it on start. Restoring the old copy is always correct
-because retention and compaction are re-runnable.
+Retention is also the compaction. The collector appends one parquet
+file per tick per series (index.js:250-257) — at a 1-second cadence
+that is ~86k files per partition per day, which kills scan planning
+(file listing) and footer overhead long before data volume matters.
+The rewrite leaves ONE file sorted on ``time`` (``coalesce(1)`` plus a
+local sort, no shuffle), and the sort gives the parquet row-group
+min/max stats their pruning power for range scans.
+
+``swap_dir`` is the one way ``streaming/`` rewrites a dataset that
+already exists: retention swaps a ``name=<s>`` partition, and the
+corpus/crawl reconciliation swaps ``docs``, ``signatures``,
+``crawl_meta`` and the rest. The new copy is written aside first, so a
+write that fails leaves the live copy untouched (Spark's Overwrite
+would delete the target before its job runs). The swap is NOT atomic:
+between its two renames the dataset is briefly invisible to readers.
+A crash in that window leaves the old copy aside under
+``<root>/.swap/``; ``recover_swaps`` renames it back, and the
+collector and both reconcile functions run it first. Restoring the
+old copy is always correct because every rewrite is re-runnable.
 
 CONCURRENCY CONTRACT (review finding): the swap is NOT safe against a
-concurrent WRITER — a file appended to the partition between the
+concurrent WRITER — a file appended to the dataset between the
 rewrite's scan and the rename is swept aside with the old copy and
 deleted. Retention must therefore run serialized with ingestion: the
 collector calls it from inside its own tick (the reference's single
 setInterval loop, index.js:268-282, has the same property by
-construction). Plain parquet has no transaction log to detect the
-race; Delta/Iceberg is the lift when maintenance must run out-of-band.
+construction); reconciliation runs with the stream stopped. Plain
+parquet has no transaction log to detect the race; Delta/Iceberg is
+the lift when maintenance must run out-of-band.
 """
 
 from __future__ import annotations
@@ -37,40 +51,42 @@ from datetime import datetime, timedelta, timezone
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-# aside copies live inside the table root: partition discovery skips
-# dot-prefixed directories, and recovery stays scoped to one table
+from ..operators.core import retention_filter
+
+# aside copies live inside the root: partition discovery skips
+# dot-prefixed directories, and recovery stays scoped to one root
 SWAP_DIR = ".swap"
 
 
-def recover_swaps(table_path: str) -> None:
-    """Rename back every old copy whose partition is missing (a swap
+def recover_swaps(root: str) -> None:
+    """Rename back every old copy whose directory is missing (a swap
     interrupted between its two renames), then drop ``.swap``."""
-    swap_dir = os.path.join(table_path, SWAP_DIR)
+    swap_dir = os.path.join(root, SWAP_DIR)
     if not os.path.isdir(swap_dir):
         return
-    for entry in os.listdir(swap_dir):
-        part, _tag, kind = entry.rsplit(".", 2)
-        part_dir = os.path.join(table_path, part)
-        if kind == "old" and not os.path.exists(part_dir):
-            os.rename(os.path.join(swap_dir, entry), part_dir)
+    for aside in os.listdir(swap_dir):
+        entry, _tag, kind = aside.rsplit(".", 2)
+        live = os.path.join(root, entry)
+        if kind == "old" and not os.path.exists(live):
+            os.rename(os.path.join(swap_dir, aside), live)
     shutil.rmtree(swap_dir)
 
 
-def _swap_partition(table_path: str, name: str, df: DataFrame) -> None:
-    """Replace series ``name``'s partition with ``df``: write the new
-    copy aside, rename the old partition aside, rename the new one in,
-    then delete the old. Recovery runs on the way out, so a failed
-    swap restores the old copy, and a finished one leaves no
-    ``.swap`` entries."""
-    entry = f"name={name}"
-    part_dir = os.path.join(table_path, entry)
-    aside = os.path.join(table_path, SWAP_DIR, f"{entry}.{uuid.uuid4().hex}")
+def swap_dir(root: str, entry: str, df: DataFrame) -> None:
+    """Replace the dataset at ``<root>/<entry>`` with ``df``: write the
+    new copy aside, rename the old one aside, rename the new one in,
+    then delete the old. ``df`` may read the live copy (the write goes
+    elsewhere). Recovery runs on the way out, so a failed swap keeps
+    or restores the old copy, and a finished one leaves no ``.swap``
+    entries."""
+    live = os.path.join(root, entry)
+    aside = os.path.join(root, SWAP_DIR, f"{entry}.{uuid.uuid4().hex}")
     try:
         df.write.mode("overwrite").parquet(aside + ".new")
-        os.rename(part_dir, aside + ".old")
-        os.rename(aside + ".new", part_dir)
+        os.rename(live, aside + ".old")
+        os.rename(aside + ".new", live)
     finally:
-        recover_swaps(table_path)
+        recover_swaps(root)
 
 
 def retention_cutoff(age_seconds: int, now_epoch: float) -> datetime:
@@ -89,22 +105,24 @@ def apply_retention(
     age_seconds: int,
     now_epoch: float,
 ) -> int:
-    """Delete rows of series ``name`` strictly older than the cutoff.
+    """Delete rows of series ``name`` strictly older than the cutoff,
+    leaving the survivors as one time-sorted file.
 
     Returns the number of surviving rows. No-op if the partition does
     not exist yet.
     """
-    part_dir = os.path.join(table_path, f"name={name}")
+    entry = f"name={name}"
+    part_dir = os.path.join(table_path, entry)
     if not os.path.isdir(part_dir):
         return 0
     cutoff = retention_cutoff(age_seconds, now_epoch)
     # the write fills the survivor count: no second job re-reads the copy
     observed = Observation()
     survivors = (
-        spark.read.parquet(part_dir)
-        .filter(F.col("time") >= F.lit(cutoff).cast("timestamp_ntz"))
+        retention_filter(spark.read.parquet(part_dir), cutoff, "time")
         .observe(observed, F.count(F.lit(1)).alias("n"))
         .coalesce(1)
+        .sortWithinPartitions("time")
     )
-    _swap_partition(table_path, name, survivors)
+    swap_dir(table_path, entry, survivors)
     return observed.get["n"]
