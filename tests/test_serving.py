@@ -60,11 +60,85 @@ def test_timeseries_shape(metrics):
     )
 
 
-def test_max_points_time_asc(metrics):
+def test_max_points_time_asc(spark, metrics):
     p = dict(PAYLOAD, maxDataPoints=2)
     out = grafana.handle_query(p, metrics, known_series={"cpu"})
     # LIMIT keeps the EARLIEST n (time-ASC order, index.js:106)
     assert out[0]["datapoints"] == [[2.0, 1704067202000], [3.0, 1704067203000]]
+
+    # the cap is per series: two targets over it each keep their own
+    # earliest n; rows tied on time are ranked by value, so the cut
+    # through a tie keeps the smaller value; a known series with no
+    # rows is omitted from the timeseries response
+    from datetime import datetime
+
+    tie = spark.createDataFrame(
+        [
+            ("tie", datetime(2024, 1, 1, 0, 0, 2), 3.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 3), 9.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 3), 7.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 4), 1.0),
+        ],
+        metrics.schema,
+    )
+    names = ["cpu", "mem", "tie", "idle"]
+    p = dict(p, targets=[{"target": n, "type": "timeseries"} for n in names])
+    out = grafana.handle_query(p, metrics.union(tie), known_series=set(names))
+    t2, t3 = 1704067202000, 1704067203000
+    assert out == [
+        {"target": "cpu", "datapoints": [[2.0, t2], [3.0, t3]]},
+        {"target": "mem", "datapoints": [[102.0, t2], [103.0, t3]]},
+        {"target": "tie", "datapoints": [[3.0, t2], [7.0, t3]]},
+    ]
+
+
+@pytest.fixture(scope="module")
+def stored_metrics(spark, tmp_path_factory):
+    """Two series in a parquet table partitioned by name, several files
+    per series — the layout the collector writes."""
+    from datetime import datetime
+
+    from timeseries_data_provider_spark.streaming.ingest import (
+        METRICS_SCHEMA,
+        read_metrics,
+    )
+
+    rows = [
+        (n, datetime(2024, 1, 1, 0, 0, s), float(s))
+        for n in ("cpu", "mem")
+        for s in range(30)
+    ]
+    path = str(tmp_path_factory.mktemp("served") / "metrics")
+    frame = spark.createDataFrame(rows, METRICS_SCHEMA).repartition(3)
+    frame.write.partitionBy("name").parquet(path)
+    return read_metrics(spark, path)
+
+
+def test_capped_query_is_one_job_one_stage(spark, stored_metrics):
+    # the maxDataPoints cap runs on the coalesced scan: no Exchange, so
+    # no second job and no second stage
+    p = dict(
+        PAYLOAD,
+        targets=[{"target": "cpu"}, {"target": "mem"}],
+        maxDataPoints=3,
+    )
+    sc = spark.sparkContext
+    group = "test-capped-query"
+    sc.setJobGroup(group, "capped /query")
+    try:
+        out = grafana.handle_query(p, stored_metrics, {"cpu", "mem"})
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    assert [len(s["datapoints"]) for s in out] == [3, 3]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
 
 
 def test_table_shape_and_union(metrics):

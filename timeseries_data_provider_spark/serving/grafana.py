@@ -22,9 +22,11 @@ Deliberate divergences from reference defects (SURVEY.md §4.3):
    reaches the same outcome by crashing into its catch handler,
    index.js:29-31 + :103).
 
-Spark is not a low-latency point-query server; the intended deployment
-keeps the metrics frame cached and bounds every response by
-``maxDataPoints`` — driver-side collect() is capped by construction.
+Spark is not a low-latency point-query server. ``serve()`` holds the
+metrics as a plain, uncached DataFrame over the parquet table, so each
+``/query`` plans and scans the pruned ``name=<s>`` files afresh; every
+response is bounded by ``maxDataPoints``, so the driver-side collect()
+is capped by construction.
 """
 
 from __future__ import annotations
@@ -91,7 +93,15 @@ def handle_query(
 
     All requested series run as ONE Spark job (name IN (...) with
     partition pruning) instead of the reference's per-target fan-out
-    (index.js:97-110); the collect() is the Promise.all barrier.
+    (index.js:97-110); the collect() is the Promise.all barrier. With
+    ``maxDataPoints`` that job is also one stage and one task: the
+    pruned, filtered scan is coalesced to one partition before the
+    per-series cap, so the cap's window needs no Exchange.
+
+    Scale: after a retention pass a series is one file, which is one
+    scan task already, so the coalesce only serialises the k targets
+    of one panel (a handful); the output is at most
+    ``k × maxDataPoints`` rows either way.
 
     A body of any other shape (not an object, non-list ``targets``,
     non-object targets or ``range``, an unparseable range bound, a
@@ -144,7 +154,10 @@ def handle_query(
     # of a per-target global limit. Ties beyond (time) break on the
     # value column so the capped point set is deterministic (the
     # metrics schema has no row id; full-duplicate rows are then
-    # interchangeable).
+    # interchangeable). The coalesce sits above the pruned, pushed-down
+    # scan; its single partition already satisfies the window's
+    # clustering on name, so the planner adds no Exchange and the
+    # row_number filter still becomes a WindowGroupLimit.
     from pyspark.sql import Window
 
     # METRICS_SCHEMA's series and time columns
@@ -152,7 +165,8 @@ def handle_query(
     if max_points is not None:
         w = Window.partitionBy("name").orderBy("time", "value")
         df = (
-            df.withColumn("__rn", F.row_number().over(w))
+            df.coalesce(1)
+            .withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") <= max_points)
             .drop("__rn")
         )

@@ -35,7 +35,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F
 
 from timeseries_data_provider_spark.serving import http_server
-from timeseries_data_provider_spark.serving.grafana import search
 from timeseries_data_provider_spark.session import get_spark
 from timeseries_data_provider_spark.streaming.config import SourceConfig
 from timeseries_data_provider_spark.streaming.ingest import (
@@ -222,7 +221,7 @@ def main() -> int:
     print("== stage 2: Grafana serving over the collected table")
     metrics = read_metrics(spark, table)
     auth = {"enabled": True, "username": "grafana", "password": "s3cret"}
-    known = set(search(metrics))
+    known = {r["name"] for r in metrics.select("name").distinct().collect()}
     server, _ = http_server.serve(metrics, known, auth_config=auth)
     port = server.server_address[1]
     url = f"http://127.0.0.1:{port}"
