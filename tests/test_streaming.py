@@ -5,6 +5,7 @@ cutoff (:273)."""
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -105,8 +106,20 @@ def test_custom_transform(spark, tmp_path):
     assert df.collect()[0]["value"] == 3.25
 
 
+def _job_count(spark, group, action):
+    """Run ``action`` under a fresh job group; returns how many Spark
+    jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_tick_appends_without_parallelize(spark, tmp_path, monkeypatch):
-    """A tick hands its batch to Spark as an Arrow table, so it never
+    """A tick writes its batch from the driver as Arrow, so it never
     pickles rows through ``SparkContext.parallelize``."""
     from pyspark import SparkContext
 
@@ -120,6 +133,52 @@ def test_tick_appends_without_parallelize(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
     rows = read_metrics(spark, str(tmp_path / "metrics")).collect()
     assert [(r["name"], r["value"]) for r in rows] == [("s", 4.0)]
+
+
+def test_tick_writes_from_the_driver(spark, tmp_path):
+    """A tick runs no Spark job: each due series gets one parquet file
+    in its partition directory, which Spark reads back with the stored
+    types, and the tick leaves no aside entries."""
+    sources = [SourceConfig(name="a", interval=1), SourceConfig(name="b", interval=1)]
+    body = json.dumps({"count": 2.0})
+    c, _ = _collector(spark, tmp_path, sources, {"a": body, "b": body})
+    path = str(tmp_path / "metrics")
+    for t in range(2):
+        tick = functools.partial(c.tick, tick_time=1_700_000_000 + t)
+        assert _job_count(spark, f"tick-no-job-{t}", tick) == 0
+    assert sorted(os.listdir(path)) == ["name=a", "name=b"]
+    files = os.listdir(os.path.join(path, "name=a"))
+    assert len(files) == 2
+    assert all(f.startswith("part-") and f.endswith(".parquet") for f in files)
+    inferred = spark.read.parquet(os.path.join(path, "name=a", files[0])).schema
+    assert [(f.name, f.dataType.typeName()) for f in inferred] == [
+        ("time", "timestamp_ntz"),
+        ("value", "double"),
+    ]
+    assert read_metrics(spark, path).count() == 4
+
+
+def test_append_crash_leaves_nothing_visible(spark, tmp_path, monkeypatch):
+    """An append cut off before its rename leaves a hidden file that no
+    read sees; the next collector start removes it."""
+    src = SourceConfig(name="s", interval=1)
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    c.tick(tick_time=1_700_000_000)
+    path = str(tmp_path / "metrics")
+
+    def rename(src_path, dst_path):
+        raise OSError("injected crash")
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(OSError, match="injected crash"):
+        c.tick(tick_time=1_700_000_001)
+    monkeypatch.undo()
+    assert len(os.listdir(os.path.join(path, ".swap"))) == 1
+    assert read_metrics(spark, path).count() == 1
+
+    MetricsCollector(spark, [src], path)
+    assert sorted(os.listdir(path)) == ["name=s"]
+    assert read_metrics(spark, path).count() == 1
 
 
 def _subsecond_ticks(spark, path):
@@ -221,6 +280,50 @@ def test_retention_compacts_to_one_time_sorted_file(
     assert sorted(r["time"] for r in after) == before  # lossless
     stored = pq.read_table(os.path.join(part, files()[0]))["time"].to_pylist()
     assert stored == sorted(stored) == before
+
+
+def test_retention_pass_runs_one_job(spark, tmp_path):
+    """Retention reads its partition with the stored schema, so a pass
+    is the rewrite's one job, with no schema-inference job before it."""
+    src = SourceConfig(name="s", interval=1)
+    now = 1_700_000_000
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    for t in range(3):
+        c.tick(tick_time=now + t)
+    path = str(tmp_path / "metrics")
+    survivors: list[int] = []
+
+    def retain():
+        survivors.append(apply_retention(spark, path, "s", 1, now + 2))
+
+    assert _job_count(spark, "retention-one-job", retain) == 1
+    assert survivors == [2]
+
+
+def test_retention_of_escaped_series_names(spark, tmp_path):
+    """Spark's partitioned writer escapes ``:``, ``/``, ``=``, ``%`` and
+    ``?`` in a partition value; the append and retention find the same
+    directory, so every series reads back and loses its old rows."""
+    names = ["cpu:load", "a/b", "x=y", "50%", "q?", "temp °C"]
+    sources = [SourceConfig(name=n, interval=1) for n in names]
+    body = json.dumps({"count": 1.0})
+    c, _ = _collector(spark, tmp_path, sources, {n: body for n in names})
+    now = 1_700_000_000
+    for t in range(3):
+        c.tick(tick_time=now + t)
+    path = str(tmp_path / "metrics")
+    assert "name=cpu%3Aload" in os.listdir(path)
+
+    def counts():
+        df = read_metrics(spark, path).groupBy("name").count()
+        return {r["name"]: r["count"] for r in df.collect()}
+
+    assert counts() == {n: 3 for n in names}
+    for n in names:
+        # cutoff lands on the t=+1 sample: t=+0 goes
+        assert apply_retention(spark, path, n, 1, now + 2) == 2
+    assert counts() == {n: 2 for n in names}
+    assert len(os.listdir(path)) == len(names)
 
 
 def test_retention_via_scheduler(spark, tmp_path):

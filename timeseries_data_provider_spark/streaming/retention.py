@@ -50,17 +50,46 @@ from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 from ..operators.core import retention_filter
+
+# The metrics table: partitioned by ``name``, so a stored file holds
+# only ``time`` and ``value`` (SERIES_SCHEMA). Both the collector's
+# append and the retention rewrite write and read files of that schema.
+METRICS_SCHEMA = StructType(
+    [
+        StructField("name", StringType(), False),
+        StructField("time", TimestampNTZType(), False),
+        StructField("value", DoubleType(), False),
+    ]
+)
+SERIES_SCHEMA = StructType(METRICS_SCHEMA.fields[1:])
 
 # aside copies live inside the root: partition discovery skips
 # dot-prefixed directories, and recovery stays scoped to one root
 SWAP_DIR = ".swap"
 
 
+def series_entry(spark: SparkSession, name: str) -> str:
+    """The partition directory of series ``name``, relative to the
+    table root, with the value escaped exactly as Spark's partitioned
+    writer escapes it (``cpu:load`` → ``name=cpu%3Aload``)."""
+    utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    return f"name={utils.escapePathName(name)}"
+
+
 def recover_swaps(root: str) -> None:
     """Rename back every old copy whose directory is missing (a swap
-    interrupted between its two renames), then drop ``.swap``."""
+    interrupted between its two renames), then drop ``.swap`` with
+    whatever else is left there (a new copy or an append's file that
+    was never renamed in)."""
     swap_dir = os.path.join(root, SWAP_DIR)
     if not os.path.isdir(swap_dir):
         return
@@ -111,15 +140,17 @@ def apply_retention(
     Returns the number of surviving rows. No-op if the partition does
     not exist yet.
     """
-    entry = f"name={name}"
+    entry = series_entry(spark, name)
     part_dir = os.path.join(table_path, entry)
     if not os.path.isdir(part_dir):
         return 0
     cutoff = retention_cutoff(age_seconds, now_epoch)
-    # the write fills the survivor count: no second job re-reads the copy
+    # the stored schema (no inference job), and the write fills the
+    # survivor count: no second job re-reads the copy
     observed = Observation()
+    stored = spark.read.schema(SERIES_SCHEMA).parquet(part_dir)
     survivors = (
-        retention_filter(spark.read.parquet(part_dir), cutoff, "time")
+        retention_filter(stored, cutoff, "time")
         .observe(observed, F.count(F.lit(1)).alias("n"))
         .coalesce(1)
         .sortWithinPartitions("time")
