@@ -26,6 +26,7 @@ driver-scorable row.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 from collections.abc import Callable
@@ -71,6 +72,23 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 def _t(spark: SparkSession, sf_dir: str, name: str, **kw) -> DataFrame:
     return tables.load_table(spark, sf_dir, name, **kw)
+
+
+# Construction artifacts of the declared queries (fitted models,
+# checkpointed frames, materialized layouts, config tables): bench
+# re-invokes each query per pass, so each artifact is built once per
+# SparkContext. A localCheckpointed frame dies with its context, so a
+# new session rebuilds instead of reading stale RDDs.
+_BUILT: dict[tuple, object] = {}
+
+
+def _memo(spark: SparkSession, key, build: Callable[[], object]):
+    """``build()`` once per (applicationId, key); later calls on the
+    same SparkContext return the stored artifact."""
+    k = (spark.sparkContext.applicationId, key)
+    if k not in _BUILT:
+        _BUILT[k] = build()
+    return _BUILT[k]
 
 
 # ---------------------------------------------------------------------------
@@ -192,9 +210,6 @@ def q17_hash_dedup(spark, sf):
     )
 
 
-_Q18_PROFILES: dict[tuple, object] = {}
-
-
 def q18_lang_stats(spark, sf):
     """Per-language corpus stats (actual lang column) + language-ID
     guess distribution (marker-word heuristic), union-tagged.
@@ -224,14 +239,14 @@ def q18_lang_stats(spark, sf):
     # is langs x top_k rows (tiny) but deriving it lazily inside the
     # classify plan re-ran the full corpus trigram explode + rank
     # windows on every invocation (bench: the cavnar branch dominated
-    # q18); the q64-KN cache contract
-    key = (spark.sparkContext.applicationId, sf)
-    prof = _Q18_PROFILES.get(key)
-    if prof is None:
-        prof = langid.train_langid_profiles(d, top_k=100).localCheckpoint(
+    # q18)
+    prof = _memo(
+        spark,
+        ("q18_profiles", sf),
+        lambda: langid.train_langid_profiles(d, top_k=100).localCheckpoint(
             eager=True
-        )
-        _Q18_PROFILES[key] = prof
+        ),
+    )
     cavnar = (
         langid.langid_classify(d, prof, top_k=100)
         # langid_classify emits NULL for docs <3 chars; the oracle's
@@ -486,23 +501,17 @@ def q30_simhash_pairs(spark, sf):
     return dedup.simhash_hamming_pairs(_t(spark, sf, "documents"), max_distance=8)
 
 
-_PQ_BOOKS: dict[str, list] = {}
-
-
 def _q31_pq_books(spark, sf) -> list:
     """Seed PQ codebooks for q31's 'pq' branch — iterations=0 keeps
     them SQL-rebuildable (the 16 lowest vec_ids' subvectors); one
-    config-sized collect per (process, sf), cached."""
-    books = _PQ_BOOKS.get(sf)
-    if books is None:
-        books = similarity.train_pq_codebooks(
+    config-sized collect per (SparkContext, sf), cached."""
+    return _memo(
+        spark,
+        ("q31_pq_books", sf),
+        lambda: similarity.train_pq_codebooks(
             _t(spark, sf, "embeddings"), m=8, ncodes=16, iterations=0
-        )
-        _PQ_BOOKS[sf] = books
-    return books
-
-
-_Q31_PQ_CODES: dict[str, tuple[str, list]] = {}
+        ),
+    )
 
 
 def _q31_pq_codes_path(spark, sf) -> str:
@@ -516,7 +525,7 @@ def _q31_pq_codes_path(spark, sf) -> str:
     expression nodes) was re-ANALYZED by Catalyst on every q31
     compile — a fixed multi-second driver cost inflating every
     branch-filtered bench run, not just pq. Building once per
-    (process, sf) moves both costs out of the measured query."""
+    (SparkContext, sf) moves both costs out of the measured query."""
 
     def build(path: str) -> list:
         books = _q31_pq_books(spark, sf)
@@ -525,7 +534,7 @@ def _q31_pq_codes_path(spark, sf) -> str:
         ).write.mode("overwrite").parquet(path)
         return []
 
-    path, _ = _cached_layout(_Q31_PQ_CODES, sf, "q31pqcodes", build)
+    path, _ = _cached_layout(spark, sf, "q31pqcodes", build)
     return path
 
 
@@ -569,7 +578,7 @@ def q31_ann_topk(spark, sf):
     # ivf_topk_from_layout) — composed here rather than declared as a
     # 51st row (the driver caps declared rows at 50, pinned in
     # tests/test_plans.py). Construction side effect: the FIRST call
-    # per (process, sf_dir) writes the centroid-partitioned layout to
+    # per (SparkContext, sf_dir) writes the centroid-partitioned layout to
     # a mkdtemp dir (cached; atexit cleanup) — see
     # q67_ivf_layout_probe. The oracle reproduces the full IVF
     # semantics (seed centroids, argmax assignment, top-2 probe,
@@ -588,7 +597,7 @@ def q31_ann_topk(spark, sf):
     # in-partition exact top-10 — so an append that re-trained
     # centroids, dropped rows, or mis-assigned the batch would
     # hash-mismatch. Same construction-side-effect contract as
-    # ivf_layout (cached per process/sf, atexit cleanup).
+    # ivf_layout (cached per SparkContext/sf, atexit cleanup).
     append = q68_ivf_append_probe(spark, sf).select(
         F.lit("ivf_append").alias("algo"), "vec_id", "sim"
     )
@@ -605,7 +614,7 @@ def q31_ann_topk(spark, sf):
     # exactly why the oracle scores what PQ computes, not brute).
     # Lloyd's-TRAINED books (iterations>0) are the library default,
     # pinned in tests/test_similarity_lsh.py. Construction side
-    # effect: one config-sized books collect per (process, sf),
+    # effect: one config-sized books collect per (SparkContext, sf),
     # cached like the q67/q68 layouts.
     pq = similarity.pq_topk(
         e,
@@ -1499,50 +1508,34 @@ def _crawl_url(doc_id: int) -> str:
     return f"https://cdn{m}.example.net:8443/img//{doc_id}.png?x=1"
 
 
-# One KN model per (SparkContext, sf_dir): the model is a pure function of
-# the corpus and its estimation pays several blocking aggregations
-# (count-of-counts + vocab per order), so bench re-invocations must
-# not re-train it — the q67-layout construction-side-effect contract.
-# Tables are localCheckpointed so each q64 plan starts from pinned
-# model frames instead of re-deriving three orders of aggregation.
-_Q64_KN_MODELS: dict[tuple, dict] = {}
-
 # r15: static Column expression memos — unresolved Columns are
-# immutable handles, and rebuilding the planted-page / URL trees
-# through py4j cost ~0.5 s of driver time per q64 construction
-_Q64_STATIC_COLS: dict = {}
-
-
+# immutable handles that outlive a session, and rebuilding the
+# planted-page / URL trees through py4j cost ~0.5 s of driver time per
+# q64 construction
+@functools.cache
 def _q64_planted_text_col():
-    memo = _Q64_STATIC_COLS.get("planted")
-    if memo is None:
-        memo = (_planted_page(F.col("doc_id")).alias("text"),)
-        _Q64_STATIC_COLS["planted"] = memo
-    return memo[0]
+    return _planted_page(F.col("doc_id")).alias("text")
 
 
+@functools.cache
 def _q64_url_cols():
-    memo = _Q64_STATIC_COLS.get("url")
-    if memo is None:
-        host = urls.url_host(F.col("warc_url"))
-        memo = (
-            urls.url_normalize(F.col("warc_url")).alias("url_norm"),
-            host.alias("url_host"),
-            urls.url_registered_domain(host).alias("url_domain"),
-            urls.url_path_depth(F.col("warc_url")).alias("url_depth"),
-        )
-        _Q64_STATIC_COLS["url"] = memo
-    return memo
+    host = urls.url_host(F.col("warc_url"))
+    return (
+        urls.url_normalize(F.col("warc_url")).alias("url_norm"),
+        host.alias("url_host"),
+        urls.url_registered_domain(host).alias("url_domain"),
+        urls.url_path_depth(F.col("warc_url")).alias("url_depth"),
+    )
 
 
 def _q64_kn_model(spark, sf, d):
-    # keyed on (applicationId, sf): localCheckpointed frames die with
-    # their SparkContext, so a recreated session must rebuild rather
-    # than hit stale RDDs (review finding — the q67 cache stores disk
-    # paths and does not have this hazard)
-    key = (spark.sparkContext.applicationId, sf)
-    model = _Q64_KN_MODELS.get(key)
-    if model is None:
+    """One KN model per (SparkContext, sf): the model is a pure function
+    of the corpus and its estimation pays several blocking aggregations
+    (count-of-counts + vocab per order). Tables are localCheckpointed
+    so each q64 plan starts from pinned model frames instead of
+    re-deriving three orders of aggregation."""
+
+    def build():
         from timeseries_data_provider_spark.operators import lm as _lm
 
         model = _lm.kneser_ney_lm(d, n=3)
@@ -1552,31 +1545,28 @@ def _q64_kn_model(spark, sf, d):
         model["ctx"] = [
             c.localCheckpoint(eager=True) for c in model["ctx"]
         ]
-        _Q64_KN_MODELS[key] = model
-    return model
+        return model
 
-
-# DSIR feature index + fitted log-ratio model, once per (process, sf)
-# — the same construction-artifact contract as _q64_kn_model: the
-# hashed-n-gram feature frame is a corpus INDEX (the q67-IVF-layout
-# class) and the 512-row lr table is the fitted model; per-pass work
-# stays the weighting join + the Gumbel draw.
-_Q64_DSIR: dict[tuple, tuple] = {}
+    return _memo(spark, ("q64_kn", sf), build)
 
 
 def _q64_dsir_model(spark, sf, d, dim):
-    key = (spark.sparkContext.applicationId, sf)
-    got = _Q64_DSIR.get(key)
-    if got is None:
+    """DSIR feature index + fitted log-ratio model, once per
+    (SparkContext, sf): the hashed-n-gram feature frame is a corpus
+    INDEX (the q67-IVF-layout class) and the 512-row lr table is the
+    fitted model; per-pass work stays the weighting join + the Gumbel
+    draw."""
+
+    def build():
         feats = dsirmod.ngram_bucket_features(d, dim=dim).localCheckpoint(
             eager=True
         )
         lr = dsirmod.dsir_logratios_from_features(
             feats, F.col("doc_id") % 7 == 0, dim=dim
         ).localCheckpoint(eager=True)
-        got = (feats, lr)
-        _Q64_DSIR[key] = got
-    return got
+        return feats, lr
+
+    return _memo(spark, ("q64_dsir", sf, dim), build)
 
 
 def q64_corpus_signals(spark, sf):
@@ -1653,7 +1643,7 @@ def q64_corpus_signals(spark, sf):
     guard/clamp structure, the three-level interpolation with
     operator-for-operator float ordering) and the per-token
     floor-milli-nat aggregation. The KN model is built ONCE per
-    (process, sf_dir) and its tables pinned (``_q64_kn_model`` —
+    (SparkContext, sf_dir) and its tables pinned (``_q64_kn_model`` —
     the q31/q67 construction-side-effect contract): estimation pays
     blocking count-of-count collects, which bench re-invocations
     must not re-run. (2) HTML->Markdown
@@ -1771,14 +1761,14 @@ def q64_corpus_signals(spark, sf):
     # memoized per SparkContext like the other config-sized
     # construction artifacts (createDataFrame cost ~0.3 s per
     # invocation in py4j/schema round-trips)
-    dkey = ("delays", spark.sparkContext.applicationId)
-    delays = _Q64_STATIC_COLS.get(dkey)
-    if delays is None:
-        delays = spark.createDataFrame(
+    delays = _memo(
+        spark,
+        "q64_delays",
+        lambda: spark.createDataFrame(
             [(f"example{m}.com", 5.0) for m in range(7)],
             "host string, crawl_delay double",
-        )
-        _Q64_STATIC_COLS[dkey] = delays
+        ),
+    )
     sched = frontiermod.frontier_schedule(
         crawl.select(
             "doc_id",
@@ -1824,7 +1814,7 @@ def q64_corpus_signals(spark, sf):
     # target is a subset of the pool — r11 review finding: computing
     # features three times tripled q64's DSIR cost); the feature
     # index + fitted lr model are construction artifacts cached per
-    # (process, sf) like the KN model, so bench passes measure the
+    # (SparkContext, sf) like the KN model, so bench passes measure the
     # scoring join + draw, not repeated model fits
     dsir_feats, dsir_lr = _q64_dsir_model(spark, sf, d, dsir_dim)
     dw = dsirmod.dsir_weights(
@@ -1904,32 +1894,23 @@ def q65_collector_replay(spark, sf):
     return collector_replay(spark, n_ticks=60, base_epoch=1_000_000_000)
 
 
-# One materialized IVF layout per (process, sf_dir): bench re-invokes
-# each declared query per pass, and the layout is a build ARTIFACT —
-# rebuilding it per invocation would both waste the passes and bury
-# the probe cost being measured.
-_Q67_LAYOUTS: dict[str, tuple[str, list]] = {}
-
-
-def _cached_layout(cache, sf, prefix, build) -> tuple[str, list]:
-    """Shared build-once-per-(process, sf_dir) scaffold for the
+def _cached_layout(spark, sf, prefix, build) -> tuple[str, list]:
+    """Build-once-per-(SparkContext, sf_dir) scaffold for the
     materialized-layout probes (the q67/q68 construction-side-effect
     contract): mkdtemp + atexit cleanup, ``build(path)`` returns the
     cached query vector, and repeat invocations (bench passes) re-run
-    neither the build nor the 1-row collect. ONE implementation so
-    cache-keying/cleanup semantics cannot drift between the layout
-    and append probes (review finding)."""
-    cached = cache.get(sf)
-    if cached is None:
+    neither the build nor the 1-row collect."""
+
+    def make():
         import atexit
         import shutil
         import tempfile
 
         path = tempfile.mkdtemp(prefix=prefix)
         atexit.register(shutil.rmtree, path, True)
-        cached = (path, build(path))
-        cache[sf] = cached
-    return cached
+        return path, build(path)
+
+    return _memo(spark, (prefix, sf), make)
 
 
 def _query_vec(spark, sf) -> list:
@@ -1951,9 +1932,7 @@ def _q67_layout(spark, sf) -> tuple[str, list]:
         )
         return _query_vec(spark, sf)
 
-    return _cached_layout(
-        _Q67_LAYOUTS, sf, "tdps_q67_ivf_layout_", build
-    )
+    return _cached_layout(spark, sf, "tdps_q67_ivf_layout_", build)
 
 
 def q67_ivf_layout_probe(spark, sf):
@@ -1982,9 +1961,6 @@ def q67_ivf_layout_probe(spark, sf):
     )
 
 
-_Q68_LAYOUTS: dict[str, tuple[str, list]] = {}
-
-
 def _q68_layout(spark, sf) -> tuple[str, list]:
     """Append-lifecycle layout for the q31 'ivf_append' branch: a
     4-centroid layout over the vec_id % 3 == 0 subset, then
@@ -2006,9 +1982,7 @@ def _q68_layout(spark, sf) -> tuple[str, list]:
         similarity.ivf_append(spark, batch, path)
         return _query_vec(spark, sf)
 
-    return _cached_layout(
-        _Q68_LAYOUTS, sf, "tdps_q68_ivf_append_", build
-    )
+    return _cached_layout(spark, sf, "tdps_q68_ivf_append_", build)
 
 
 def q68_ivf_append_probe(spark, sf):

@@ -158,6 +158,9 @@ def _load_bench(path: str):
     if isinstance(parsed, dict) and isinstance(
         parsed.get("queries"), dict
     ):
+        # the wrapper records the run's core count next to ``parsed``
+        if "cpus" in d and "cpus" not in parsed:
+            return {**parsed, "cpus": d["cpus"]}
         return parsed
     return None
 
@@ -185,7 +188,7 @@ def _prev_artifact(repo_dir: str):
     return None, None
 
 
-def _vs_prev(prev_path, prev, timings, spread, sf_num, branches):
+def _vs_prev(prev_path, prev, timings, spread, sf_num, branches, cpus):
     """Machine-separate composition cost from regression (VERDICT r6
     item 7): ratio each query against the previous artifact and flag
     unexplained >1.5x moves. A flag requires BOTH the min and the p50
@@ -194,11 +197,18 @@ def _vs_prev(prev_path, prev, timings, spread, sf_num, branches):
     Branch timings (VERDICT r8 item 8) diff the same way under
     "query::branch" keys when the previous artifact carries them —
     a regression inside one union branch flags even when the composed
-    row's total hides it."""
+    row's total hides it. Wall times taken at another scale factor or
+    on another core count do not compare, so those diffs are skipped
+    (an artifact that does not record its cores is still diffed)."""
     if prev.get("sf") != sf_num:
         return {
             "prev": os.path.basename(prev_path),
             "skipped": f"prev sf={prev.get('sf')} != {sf_num}",
+        }
+    if prev.get("cpus") is not None and prev["cpus"] != cpus:
+        return {
+            "prev": os.path.basename(prev_path),
+            "skipped": f"prev cpus={prev['cpus']} != {cpus}",
         }
     m = re.match(
         r"BENCH_r(\d+)", os.path.basename(prev_path or "")
@@ -344,6 +354,7 @@ def main() -> None:
             }
             for name, s in samples.items()
         }
+        cpus = spark.sparkContext.defaultParallelism
         sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
         try:
             sf_num = float(sf)
@@ -369,6 +380,7 @@ def main() -> None:
             "branches": branches,
             "repeat": repeat,
             "sf": sf_num,
+            "cpus": cpus,
             "loadavg": {
                 "start": load_start,
                 "end": [round(x, 2) for x in os.getloadavg()],
@@ -381,7 +393,8 @@ def main() -> None:
             )
             if prev is not None:
                 out["vs_prev"] = _vs_prev(
-                    prev_path, prev, timings, spread, sf_num, branches
+                    prev_path, prev, timings, spread, sf_num, branches,
+                    cpus,
                 )
                 flagged = out["vs_prev"].get("flagged") or {}
         # The driver records only the LAST ~2000 chars of stdout and
@@ -407,6 +420,7 @@ def main() -> None:
             "unit": "sec",
             "queries": {k: round(v, 3) for k, v in timings.items()},
             "sf": sf_num,
+            "cpus": cpus,
             "loadavg": out["loadavg"],
         }
         line = json.dumps(compact, separators=(",", ":"))

@@ -164,7 +164,7 @@ def ngram_jaccard_pairs(
     unchanged for every pair that shares at least one sub-cap shingle.
 
     The cap IS the default (VERDICT r4 #2): the 64×-skew stress row
-    (BASELINE.md §C, tools/stress_hot_shingle.py) measured the uncapped
+    (BASELINE.md §C, `tools/stress.py hotshingle`) measured the uncapped
     join 15× slower when a single boilerplate sentence is shared
     corpus-wide, with ZERO recall loss from capping at near-dup
     thresholds — a library caller at scale should not need to know

@@ -1129,7 +1129,7 @@ def rp_topk(
       reaches the parquet reader as a pushed row-group filter: with an
       id-sorted/bucketed vector table the re-rank reads a handful of
       row groups instead of the corpus. This is the production shape
-      -- measured in BASELINE.md §C (stress_round5 rp row).
+      -- measured in BASELINE.md §C (`tools/stress.py rp`).
 
     Zero-norm projections (a vector orthogonal to every hyperplane, or
     the zero vector) are excluded from candidates -- their projected

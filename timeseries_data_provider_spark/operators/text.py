@@ -10,6 +10,8 @@ per-row maps; only the aggregating variants shuffle once).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -341,7 +343,35 @@ def _max_run(arr: Column) -> Column:
     )
 
 
-_REP_SIGNAL_COLS_MEMO: dict = {}
+@functools.cache
+def _repetition_cols(text_col: str) -> tuple:
+    """repetition_signals' expression columns. Memoized per text_col
+    (r15): unresolved Columns are immutable handles and this tree cost
+    ~0.4 s of py4j per query construction."""
+    w = _words(text_col)
+    n = F.size(w)
+    # guard n < 2: slice(w, 1, n-1) would raise on a negative
+    # length now that empty/one-token docs really have < 2 tokens
+    bigrams = F.when(
+        n >= 2,
+        F.zip_with(
+            F.slice(w, 1, n - 1),
+            F.slice(w, 2, n - 1),
+            lambda a, b: F.concat_ws(" ", a, b),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+    return (
+        n.cast("long").alias("n_tokens"),
+        F.round(
+            F.when(
+                n > 0,
+                F.lit(1.0) - F.size(F.array_distinct(w)).cast("double") / n,
+            ),
+            6,
+        ).alias("dup_word_frac"),
+        _max_run(F.array_sort(bigrams)).alias("top_bigram_n"),
+        _max_run(w).alias("max_word_run"),
+    )
 
 
 def repetition_signals(
@@ -357,40 +387,8 @@ def repetition_signals(
     most-frequent-bigram count is the longest equal-run in the SORTED
     bigram array (``array_sort`` + the same fold), so no explode, no
     shuffle, no per-doc aggregation; linear at any corpus size.
-
-    The expression columns are memoized per text_col (r15): unresolved
-    Columns are immutable handles and this tree cost ~0.4 s of py4j
-    per query construction.
     """
-    memo = _REP_SIGNAL_COLS_MEMO.get(text_col)
-    if memo is None:
-        w = _words(text_col)
-        n = F.size(w)
-        # guard n < 2: slice(w, 1, n-1) would raise on a negative
-        # length now that empty/one-token docs really have < 2 tokens
-        bigrams = F.when(
-            n >= 2,
-            F.zip_with(
-                F.slice(w, 1, n - 1),
-                F.slice(w, 2, n - 1),
-                lambda a, b: F.concat_ws(" ", a, b),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        memo = (
-            n.cast("long").alias("n_tokens"),
-            F.round(
-                F.when(
-                    n > 0,
-                    F.lit(1.0)
-                    - F.size(F.array_distinct(w)).cast("double") / n,
-                ),
-                6,
-            ).alias("dup_word_frac"),
-            _max_run(F.array_sort(bigrams)).alias("top_bigram_n"),
-            _max_run(w).alias("max_word_run"),
-        )
-        _REP_SIGNAL_COLS_MEMO[text_col] = memo
-    return documents.select(id_col, *memo).withColumn(
+    return documents.select(id_col, *_repetition_cols(text_col)).withColumn(
         # capped at 1: overlapping occurrences of the same bigram share
         # tokens, so 2*count/n exceeds 1 exactly on the most
         # repetitious documents (review finding — 'a a a a' scored
@@ -439,9 +437,7 @@ def line_signals(
     )
 
 
-_LINE_SIGNAL_COLS_MEMO: dict = {}
-
-
+@functools.cache
 def _line_signal_cols(text_col: str = "text") -> dict:
     """The line_signals expressions as a named dict — shared by
     ``line_signals`` (select form) and ``c4_filter`` (filter form, no
@@ -459,9 +455,6 @@ def _line_signal_cols(text_col: str = "text") -> dict:
     class before the terminal/bullet/ellipsis checks — plain trim()
     strips only spaces, so 'Read more...\\r' used to count as terminal
     and '.\\t' never did (review finding)."""
-    memo = _LINE_SIGNAL_COLS_MEMO.get(text_col)
-    if memo is not None:
-        return memo
     lines = F.split(F.col(text_col), "\\r?\\n")
     n_lines = F.size(lines)
 
@@ -507,7 +500,6 @@ def _line_signal_cols(text_col: str = "text") -> dict:
         "has_javascript": low.contains("javascript"),
         "kept_line_frac": frac(keep),
     }
-    _LINE_SIGNAL_COLS_MEMO[text_col] = cols
     return cols
 
 
@@ -571,7 +563,20 @@ PII_PATTERNS = {
 }
 
 
-_REDACT_COLS_MEMO: dict = {}
+@functools.cache
+def _redact_cols(text_col: str, kinds: tuple[str, ...]) -> tuple:
+    """redact_pii's output columns, memoized per (text_col, kinds) like
+    the other signal builders (r15): unresolved Columns are immutable
+    handles."""
+    out = F.col(text_col)
+    counts = []
+    for kind in kinds:
+        pat = PII_PATTERNS[kind]
+        counts.append(
+            F.regexp_count(out, F.lit(pat)).cast("long").alias(f"n_{kind}")
+        )
+        out = F.regexp_replace(out, pat, f"<{kind.upper()}>")
+    return (out.alias("text_redacted"), *counts)
 
 
 def redact_pii(
@@ -593,23 +598,7 @@ def redact_pii(
     specific pattern must run first (card before phone, or the phone
     pattern eats a 16-digit card in chunks) and progressive counting
     prevents one span being double-counted across kinds."""
-    memo = _REDACT_COLS_MEMO.get((text_col, kinds))
-    if memo is None:
-        out = F.col(text_col)
-        counts = []
-        for kind in kinds:
-            pat = PII_PATTERNS[kind]
-            counts.append(
-                F.regexp_count(out, F.lit(pat))
-                .cast("long")
-                .alias(f"n_{kind}")
-            )
-            out = F.regexp_replace(out, pat, f"<{kind.upper()}>")
-        # unresolved Columns are immutable handles — memoized per
-        # (text_col, kinds) like the other signal builders (r15)
-        memo = (out.alias("text_redacted"), *counts)
-        _REDACT_COLS_MEMO[(text_col, kinds)] = memo
-    return documents.select(id_col, *memo)
+    return documents.select(id_col, *_redact_cols(text_col, tuple(kinds)))
 
 
 def compression_ratio(

@@ -10,7 +10,7 @@ QueryStage wrappers) and returns each parquet scan's post-pruning
 of the table the scan was actually ALLOWED to touch after partition
 pruning and pushed filters, independent of cache state.
 
-Used by the stress probes (tools/stress_round*.py) and available to
+Used by the stress probes (tools/stress.py) and available to
 callers auditing their own layouts.
 """
 

@@ -23,7 +23,8 @@ deduped, not merely annotated.
 Producer contract: files must be RENAMED into ``source_dir``, not
 written in place — the file source lists eagerly and will happily
 read the half-flushed prefix of an in-progress write as the whole
-document set (measured in tools/stress_round6.py: 2.6k of 10k rows).
+document set (measured by `tools/stress.py streamingest`: 2.6k of 10k
+rows).
 Write to a sibling temp path and ``os.replace``/``mv`` in; every
 serious file-hand-off pipeline already follows this contract.
 
