@@ -13,13 +13,17 @@ from datetime import datetime
 
 import pytest
 
+from timeseries_data_provider_spark.operators import core
 from timeseries_data_provider_spark.streaming import ingest
 from timeseries_data_provider_spark.streaming.config import SourceConfig
 from timeseries_data_provider_spark.streaming.ingest import (
     MetricsCollector,
     read_metrics,
 )
-from timeseries_data_provider_spark.streaming.retention import apply_retention
+from timeseries_data_provider_spark.streaming.retention import (
+    apply_retention,
+    retention_cutoff,
+)
 
 
 def _collector(spark, tmp_path, sources, responses):
@@ -225,12 +229,18 @@ def test_retention_strict_cutoff(spark, tmp_path):
     for t in range(5):
         c.tick(tick_time=now + t)
     path = str(tmp_path / "metrics")
+    # the rule the driver-side rewrite must agree with, on the same rows
+    rule = core.retention_filter(
+        read_metrics(spark, path), retention_cutoff(2, now + 4), "time"
+    )
+    by_rule = sorted(r["time"] for r in rule.collect())
     # cutoff lands exactly ON the t=+2 sample: strict < keeps it
     survivors = apply_retention(
         spark, path, "s", age_seconds=2, now_epoch=now + 4
     )
     assert survivors == 3  # t=+2, +3, +4 survive; +0, +1 deleted
     df = read_metrics(spark, path)
+    assert sorted(r["time"] for r in df.collect()) == by_rule
     ts = sorted(r["time"].timestamp() for r in df.collect())
     assert ts == [now + 2, now + 3, now + 4]
     # a finished swap leaves no aside copy, in the table or beside it
@@ -242,12 +252,11 @@ def test_retention_compacts_to_one_time_sorted_file(
     spark, tmp_path, monkeypatch
 ):
     """Retention is the compaction: one tiny file per tick goes in, one
-    time-sorted file comes out, every row kept, through a plan with a
-    local sort and no shuffle."""
+    time-sorted file comes out, every row kept, with no Spark job."""
     import pyarrow.parquet as pq
 
-    from timeseries_data_provider_spark.streaming import retention
-
+    # hold off the collector's own compaction so 12 files pile up
+    monkeypatch.setattr(ingest, "COMPACT_EVERY", 100)
     src = SourceConfig(name="s", interval=1)
     now = 1_700_000_000
     c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
@@ -262,17 +271,14 @@ def test_retention_compacts_to_one_time_sorted_file(
     assert len(files()) >= 12
     before = sorted(r["time"] for r in read_metrics(spark, path).collect())
 
-    plans: list[str] = []
-    real_swap = retention.swap_dir
+    survivors: list[int] = []
 
-    def swap_dir(root, entry, df):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        real_swap(root, entry, df)
+    def retain():
+        # nothing is old enough to delete: a pure compaction
+        survivors.append(apply_retention(spark, path, "s", 3600, now + 11))
 
-    monkeypatch.setattr(retention, "swap_dir", swap_dir)
-    # nothing is old enough to delete: a pure compaction
-    assert apply_retention(spark, path, "s", 3600, now + 11) == 12
-    assert "Exchange" not in plans[0] and "Sort [time" in plans[0]
+    assert _job_count(spark, "compaction-no-job", retain) == 0
+    assert survivors == [12]
 
     assert len(files()) == 1
     assert ".swap" not in os.listdir(path)
@@ -282,9 +288,9 @@ def test_retention_compacts_to_one_time_sorted_file(
     assert stored == sorted(stored) == before
 
 
-def test_retention_pass_runs_one_job(spark, tmp_path):
-    """Retention reads its partition with the stored schema, so a pass
-    is the rewrite's one job, with no schema-inference job before it."""
+def test_retention_pass_runs_no_job(spark, tmp_path):
+    """Retention rewrites its partition on the driver: a pass starts no
+    Spark job."""
     src = SourceConfig(name="s", interval=1)
     now = 1_700_000_000
     c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
@@ -296,8 +302,78 @@ def test_retention_pass_runs_one_job(spark, tmp_path):
     def retain():
         survivors.append(apply_retention(spark, path, "s", 1, now + 2))
 
-    assert _job_count(spark, "retention-one-job", retain) == 1
+    assert _job_count(spark, "retention-no-job", retain) == 0
     assert survivors == [2]
+
+
+def test_retention_rewrites_a_spark_written_partition(spark, tmp_path):
+    """A partition last rewritten by Spark holds Spark's part file, its
+    ``_SUCCESS`` marker and ``.crc`` checksums, plus the driver's
+    appends; the rewrite reads past the side files and leaves one file
+    with every row."""
+    from timeseries_data_provider_spark.streaming.retention import SERIES_SCHEMA
+
+    now = 1_700_000_000
+    path = str(tmp_path / "metrics")
+    part = os.path.join(path, "name=s")
+    # five rows from t=-10 s on (now is 2023-11-14 22:13:20 UTC)
+    old = [(datetime(2023, 11, 14, 22, 13, 10 + i), float(i)) for i in range(5)]
+    spark.createDataFrame(old, SERIES_SCHEMA).coalesce(1).write.parquet(part)
+    side = [f for f in os.listdir(part) if f.startswith((".", "_"))]
+    assert "_SUCCESS" in side and any(f.endswith(".crc") for f in side)
+
+    src = SourceConfig(name="s", interval=1)
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 9.0})})
+    for t in range(3):
+        c.tick(tick_time=now + t)
+    before = sorted(read_metrics(spark, path).collect())
+    assert len(before) == 8
+
+    assert apply_retention(spark, path, "s", 3600, now + 3) == 8
+    assert len(os.listdir(part)) == 1
+    assert os.listdir(part)[0].endswith(".parquet")
+    assert ".swap" not in os.listdir(path)
+    assert sorted(read_metrics(spark, path).collect()) == before
+
+
+def test_every_series_stays_compacted(spark, tmp_path):
+    """Over 150 injected ticks, with and without hourly retention and
+    with fetches that fail, no partition ever holds more than
+    ``COMPACT_EVERY + 1`` files and no appended row is lost."""
+    sources = [
+        SourceConfig(name="plain1", interval=1),
+        SourceConfig(name="plain3", interval=3),
+        SourceConfig(name="flaky", interval=1),
+        SourceConfig(name="hourly1", interval=1, remove_interval=3600, remove_age=3600),
+        SourceConfig(name="hourly2", interval=2, remove_interval=3600, remove_age=3600),
+    ]
+    now = 1_700_000_000
+    cur = {"t": 0}
+
+    def fetcher(src):
+        if src.name == "flaky" and cur["t"] % 7 == 3:
+            raise RuntimeError("planted failure")
+        return json.dumps({"count": float(cur["t"])})
+
+    path = str(tmp_path / "metrics")
+    c = MetricsCollector(spark, sources, path, fetcher=fetcher)
+    expected: dict[str, list[int]] = {s.name: [] for s in sources}
+    most = 0
+    for t in range(150):
+        cur["t"] = t
+        c.tick(tick_time=now + t)
+        for s in sources:
+            if t % s.interval == 0 and not (s.name == "flaky" and t % 7 == 3):
+                expected[s.name].append(now + t)
+        for entry in os.listdir(path):
+            most = max(most, len(os.listdir(os.path.join(path, entry))))
+    assert most <= ingest.COMPACT_EVERY + 1
+    rows = read_metrics(spark, path).collect()
+    got: dict[str, list[int]] = {s.name: [] for s in sources}
+    for r in rows:
+        got[r["name"]].append(int(r["time"].timestamp()))
+        assert r["value"] == r["time"].timestamp() - now
+    assert {n: sorted(v) for n, v in got.items()} == expected
 
 
 def test_retention_of_escaped_series_names(spark, tmp_path):
@@ -343,8 +419,11 @@ def test_retention_via_scheduler(spark, tmp_path):
 
 
 def test_swap_crash_recovered_on_collector_start(spark, tmp_path, monkeypatch):
-    """A crash between the swap's two renames leaves the series aside;
-    the next collector start renames the old copy back."""
+    """A rewrite whose aside write fails leaves the live series as it
+    was. A crash between the swap's two renames leaves the series
+    aside; the next collector start renames the old copy back."""
+    from timeseries_data_provider_spark.streaming import retention
+
     src = SourceConfig(name="s", interval=1)
     now = 1_700_000_000
     c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
@@ -352,6 +431,18 @@ def test_swap_crash_recovered_on_collector_start(spark, tmp_path, monkeypatch):
         c.tick(tick_time=now + t)
     path = str(tmp_path / "metrics")
     before = sorted(read_metrics(spark, path).collect())
+
+    def write_series_file(table, file_path):
+        with open(file_path, "wb") as f:
+            f.write(b"PAR1")  # a torn file, then the disk fills
+        raise OSError("injected write failure")
+
+    monkeypatch.setattr(retention, "write_series_file", write_series_file)
+    with pytest.raises(OSError, match="injected write failure"):
+        apply_retention(spark, path, "s", age_seconds=1, now_epoch=now + 3)
+    monkeypatch.undo()
+    assert sorted(read_metrics(spark, path).collect()) == before
+    assert ".swap" not in os.listdir(path)
 
     real_rename = os.rename
     calls: list[str] = []

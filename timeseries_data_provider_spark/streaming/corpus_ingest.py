@@ -375,7 +375,7 @@ def reconcile_ingest_root(
         clean = rule(df)
         after = clean.count()
         if after != before or needs_stamp:
-            swap_dir(root, name, clean)
+            swap_dir(root, name, clean.write.parquet)
         report[name] = {"before": before, "after": after}
     return report
 

@@ -305,6 +305,6 @@ def reconcile_crawl_root(spark: SparkSession, root: str) -> dict:
         before = meta.count()
         after = clean.count()
         if after != before:
-            swap_dir(root, "crawl_meta", clean)
+            swap_dir(root, "crawl_meta", clean.write.parquet)
         stats["crawl_meta"] = {"before": before, "after": after}
     return stats

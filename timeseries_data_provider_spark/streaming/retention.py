@@ -1,7 +1,7 @@
 """Retention: the reference's auto-remove pass
 (/root/reference/index.js:268-282) — ``DELETE FROM "<name>" WHERE time
 < '<cutoff>'`` with cutoff = now − age seconds, UTC, strict ``<``
-(index.js:272-273; the rule itself is ``core.retention_filter``).
+(index.js:272-273; the same rule as ``core.retention_filter``).
 
 On plain parquet (no Delta in this container) a delete is a partition
 rewrite: read ONLY the series' partition, keep survivors
@@ -10,13 +10,26 @@ other series — the same partition pruning that serves queries bounds
 maintenance I/O. On Delta/Iceberg this whole module collapses to
 ``DELETE FROM metrics WHERE name = ? AND time < ?``.
 
-Retention is also the compaction. The collector appends one parquet
+The driver writes the metrics table and Spark reads it (``/query``).
+One series is small (the reference deletes from one small series per
+pass), so the rewrite runs on the driver with pyarrow, like the
+collector's append: no Spark job, and none of the ``chmod`` child
+processes Hadoop's local file system starts for every file it creates.
+This module owns the metrics file format: ``_ARROW_SCHEMA``,
+``series_table`` and ``write_series_file`` serve both the append and
+the rewrite. Spark still rewrites the corpus/crawl datasets, through
+the same ``swap_dir``.
+
+The rewrite is also the compaction. The collector appends one parquet
 file per tick per series (index.js:250-257) — at a 1-second cadence
 that is ~86k files per partition per day, which kills scan planning
 (file listing) and footer overhead long before data volume matters.
-The rewrite leaves ONE file sorted on ``time`` (``coalesce(1)`` plus a
-local sort, no shuffle), and the sort gives the parquet row-group
-min/max stats their pruning power for range scans.
+The rewrite leaves ONE file sorted on ``time``, and the sort gives the
+parquet row-group min/max stats their pruning power for range scans.
+The collector runs it with retention's cadence, and also, keeping
+every row, once ``ingest.COMPACT_EVERY`` appends have landed since a
+series' last rewrite, so a series gains at most that many files
+between two rewrites.
 
 ``swap_dir`` is the one way ``streaming/`` rewrites a dataset that
 already exists: retention swaps a ``name=<s>`` partition, and the
@@ -47,9 +60,13 @@ import os
 import shutil
 import uuid
 from datetime import datetime, timedelta, timezone
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -57,8 +74,6 @@ from pyspark.sql.types import (
     StructType,
     TimestampNTZType,
 )
-
-from ..operators.core import retention_filter
 
 # The metrics table: partitioned by ``name``, so a stored file holds
 # only ``time`` and ``value`` (SERIES_SCHEMA). Both the collector's
@@ -71,6 +86,9 @@ METRICS_SCHEMA = StructType(
     ]
 )
 SERIES_SCHEMA = StructType(METRICS_SCHEMA.fields[1:])
+# the NTZ time maps to a zone-less µs timestamp, which Spark reads back
+# as timestamp_ntz: no session timezone touches it
+_ARROW_SCHEMA = to_arrow_schema(SERIES_SCHEMA)
 
 # aside copies live inside the root: partition discovery skips
 # dot-prefixed directories, and recovery stays scoped to one root
@@ -83,6 +101,19 @@ def series_entry(spark: SparkSession, name: str) -> str:
     writer escapes it (``cpu:load`` → ``name=cpu%3Aload``)."""
     utils = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     return f"name={utils.escapePathName(name)}"
+
+
+def series_table(times: list[datetime], values: list[float]) -> pa.Table:
+    """Rows of the stored schema, from zone-less UTC times."""
+    return pa.Table.from_pydict(
+        {"time": times, "value": values}, schema=_ARROW_SCHEMA
+    )
+
+
+def write_series_file(table: pa.Table, path: str) -> None:
+    """Write one metrics file (``time``, ``value``). No Arrow schema is
+    embedded: Spark reads the parquet types as ``SERIES_SCHEMA``."""
+    pq.write_table(table, path, store_schema=False)
 
 
 def recover_swaps(root: str) -> None:
@@ -101,17 +132,18 @@ def recover_swaps(root: str) -> None:
     shutil.rmtree(swap_dir)
 
 
-def swap_dir(root: str, entry: str, df: DataFrame) -> None:
-    """Replace the dataset at ``<root>/<entry>`` with ``df``: write the
-    new copy aside, rename the old one aside, rename the new one in,
-    then delete the old. ``df`` may read the live copy (the write goes
-    elsewhere). Recovery runs on the way out, so a failed swap keeps
-    or restores the old copy, and a finished one leaves no ``.swap``
-    entries."""
+def swap_dir(root: str, entry: str, write: Callable[[str], object]) -> None:
+    """Replace the dataset at ``<root>/<entry>`` with what ``write``
+    writes: ``write(path)`` fills a fresh aside path, then the old copy
+    is renamed aside, the new one renamed in, and the old deleted.
+    ``write`` may read the live copy (it writes elsewhere); a Spark
+    rewrite passes ``df.write.parquet``. Recovery runs on the way out,
+    so a failed swap keeps or restores the old copy, and a finished one
+    leaves no ``.swap`` entries."""
     live = os.path.join(root, entry)
     aside = os.path.join(root, SWAP_DIR, f"{entry}.{uuid.uuid4().hex}")
     try:
-        df.write.mode("overwrite").parquet(aside + ".new")
+        write(aside + ".new")
         os.rename(live, aside + ".old")
         os.rename(aside + ".new", live)
     finally:
@@ -131,11 +163,20 @@ def apply_retention(
     spark: SparkSession,
     table_path: str,
     name: str,
-    age_seconds: int,
+    age_seconds: int | None,
     now_epoch: float,
 ) -> int:
     """Delete rows of series ``name`` strictly older than the cutoff,
-    leaving the survivors as one time-sorted file.
+    leaving the survivors as one time-sorted file. ``age_seconds=None``
+    deletes nothing: the rewrite is then a pure compaction.
+
+    The rewrite runs on the driver and starts no Spark job: it reads
+    the partition with the stored schema (dataset discovery skips
+    Spark's ``_SUCCESS`` and ``.crc`` side files), keeps
+    ``time >= cutoff``, sorts on ``time`` and swaps in one file. The
+    survivors of one series are held in driver memory, about 16 B per
+    row and twice that while they are sorted (a 1 Hz series kept for
+    30 days is 2.6M rows, about 41 MB).
 
     Returns the number of surviving rows. No-op if the partition does
     not exist yet.
@@ -144,16 +185,16 @@ def apply_retention(
     part_dir = os.path.join(table_path, entry)
     if not os.path.isdir(part_dir):
         return 0
-    cutoff = retention_cutoff(age_seconds, now_epoch)
-    # the stored schema (no inference job), and the write fills the
-    # survivor count: no second job re-reads the copy
-    observed = Observation()
-    stored = spark.read.schema(SERIES_SCHEMA).parquet(part_dir)
-    survivors = (
-        retention_filter(stored, cutoff, "time")
-        .observe(observed, F.count(F.lit(1)).alias("n"))
-        .coalesce(1)
-        .sortWithinPartitions("time")
-    )
-    swap_dir(table_path, entry, survivors)
-    return observed.get["n"]
+    keep = None
+    if age_seconds is not None:
+        keep = ds.field("time") >= retention_cutoff(age_seconds, now_epoch)
+    stored = ds.dataset(part_dir, schema=_ARROW_SCHEMA, format="parquet")
+    survivors = stored.to_table(filter=keep).sort_by("time")
+
+    def write(path: str) -> None:
+        os.makedirs(path)
+        part = os.path.join(path, f"part-{uuid.uuid4().hex}.parquet")
+        write_series_file(survivors, part)
+
+    swap_dir(table_path, entry, write)
+    return survivors.num_rows
