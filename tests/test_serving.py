@@ -1,14 +1,18 @@
 """Grafana wire-contract tests (SURVEY.md §5 item 4): golden shapes for
 /search, timeseries and table responses, epoch-ms ints, stubs, auth,
 unknown-target drop, multi-table union (divergence from reference defect
-index.js:131), end-to-end over real HTTP, bounded request bodies."""
+index.js:131), end-to-end over real HTTP, bounded request bodies, and
+the per-request read: fresh after a tick, whole while swaps race it."""
 
 from __future__ import annotations
 
 import base64
 import json
+import logging
+import os
 import socket
 import urllib.request
+from datetime import datetime
 
 import pytest
 
@@ -18,20 +22,39 @@ from timeseries_data_provider_spark.serving.http_server import (
     STUB_ROUTES,
     serve,
 )
+from timeseries_data_provider_spark.streaming.config import SourceConfig
 
 
 @pytest.fixture(scope="module")
-def metrics(spark):
-    from datetime import datetime
-
-    rows = [
-        ("cpu", datetime(2024, 1, 1, 0, 0, s), float(s)) for s in range(10)
-    ] + [
-        ("mem", datetime(2024, 1, 1, 0, 0, s), 100.0 + s) for s in range(10)
-    ]
+def root(spark, tmp_path_factory):
+    """A parquet table partitioned by name, several files per series —
+    the layout the collector writes: ``cpu`` and ``mem`` at 1 Hz, four
+    ``tie`` rows, two tied on time, and one ``old`` point half a
+    millisecond before the epoch."""
     from timeseries_data_provider_spark.streaming.ingest import METRICS_SCHEMA
 
-    return spark.createDataFrame(rows, METRICS_SCHEMA)
+    rows = (
+        [("cpu", datetime(2024, 1, 1, 0, 0, s), float(s)) for s in range(10)]
+        + [("mem", datetime(2024, 1, 1, 0, 0, s), 100.0 + s) for s in range(10)]
+        + [
+            ("tie", datetime(2024, 1, 1, 0, 0, 2), 3.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 3), 9.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 3), 7.0),
+            ("tie", datetime(2024, 1, 1, 0, 0, 4), 1.0),
+            ("old", datetime(1969, 12, 31, 23, 59, 59, 999500), 1.0),
+        ]
+    )
+    path = str(tmp_path_factory.mktemp("served") / "metrics")
+    frame = spark.createDataFrame(rows, METRICS_SCHEMA).repartition(3)
+    frame.write.partitionBy("name").parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def metrics(spark, root):
+    from timeseries_data_provider_spark.streaming.ingest import read_metrics
+
+    return read_metrics(spark, root)
 
 
 PAYLOAD = {
@@ -41,8 +64,8 @@ PAYLOAD = {
 }
 
 
-def test_timeseries_shape(metrics):
-    out = grafana.handle_query(PAYLOAD, metrics, known_series={"cpu", "mem"})
+def test_timeseries_shape(root):
+    out = grafana.handle_query(PAYLOAD, root, known_series={"cpu", "mem"})
     assert out == [
         {
             "target": "cpu",
@@ -60,9 +83,9 @@ def test_timeseries_shape(metrics):
     )
 
 
-def test_max_points_time_asc(spark, metrics):
+def test_max_points_time_asc(root):
     p = dict(PAYLOAD, maxDataPoints=2)
-    out = grafana.handle_query(p, metrics, known_series={"cpu"})
+    out = grafana.handle_query(p, root, known_series={"cpu"})
     # LIMIT keeps the EARLIEST n (time-ASC order, index.js:106)
     assert out[0]["datapoints"] == [[2.0, 1704067202000], [3.0, 1704067203000]]
 
@@ -70,20 +93,9 @@ def test_max_points_time_asc(spark, metrics):
     # earliest n; rows tied on time are ranked by value, so the cut
     # through a tie keeps the smaller value; a known series with no
     # rows is omitted from the timeseries response
-    from datetime import datetime
-
-    tie = spark.createDataFrame(
-        [
-            ("tie", datetime(2024, 1, 1, 0, 0, 2), 3.0),
-            ("tie", datetime(2024, 1, 1, 0, 0, 3), 9.0),
-            ("tie", datetime(2024, 1, 1, 0, 0, 3), 7.0),
-            ("tie", datetime(2024, 1, 1, 0, 0, 4), 1.0),
-        ],
-        metrics.schema,
-    )
     names = ["cpu", "mem", "tie", "idle"]
     p = dict(p, targets=[{"target": n, "type": "timeseries"} for n in names])
-    out = grafana.handle_query(p, metrics.union(tie), known_series=set(names))
+    out = grafana.handle_query(p, root, known_series=set(names))
     t2, t3 = 1704067202000, 1704067203000
     assert out == [
         {"target": "cpu", "datapoints": [[2.0, t2], [3.0, t3]]},
@@ -92,31 +104,8 @@ def test_max_points_time_asc(spark, metrics):
     ]
 
 
-@pytest.fixture(scope="module")
-def stored_metrics(spark, tmp_path_factory):
-    """Two series in a parquet table partitioned by name, several files
-    per series — the layout the collector writes."""
-    from datetime import datetime
-
-    from timeseries_data_provider_spark.streaming.ingest import (
-        METRICS_SCHEMA,
-        read_metrics,
-    )
-
-    rows = [
-        (n, datetime(2024, 1, 1, 0, 0, s), float(s))
-        for n in ("cpu", "mem")
-        for s in range(30)
-    ]
-    path = str(tmp_path_factory.mktemp("served") / "metrics")
-    frame = spark.createDataFrame(rows, METRICS_SCHEMA).repartition(3)
-    frame.write.partitionBy("name").parquet(path)
-    return read_metrics(spark, path)
-
-
-def test_capped_query_is_one_job_one_stage(spark, stored_metrics):
-    # the maxDataPoints cap runs on the coalesced scan: no Exchange, so
-    # no second job and no second stage
+def test_capped_query_runs_no_spark_job(spark, root):
+    # the points are read on the driver: a capped /query starts no job
     p = dict(
         PAYLOAD,
         targets=[{"target": "cpu"}, {"target": "mem"}],
@@ -126,7 +115,7 @@ def test_capped_query_is_one_job_one_stage(spark, stored_metrics):
     group = "test-capped-query"
     sc.setJobGroup(group, "capped /query")
     try:
-        out = grafana.handle_query(p, stored_metrics, {"cpu", "mem"})
+        out = grafana.handle_query(p, root, {"cpu", "mem"})
     finally:
         for key in (
             "spark.jobGroup.id",
@@ -135,13 +124,10 @@ def test_capped_query_is_one_job_one_stage(spark, stored_metrics):
         ):
             sc.setLocalProperty(key, None)
     assert [len(s["datapoints"]) for s in out] == [3, 3]
-    tracker = sc.statusTracker()
-    jobs = tracker.getJobIdsForGroup(group)
-    assert len(jobs) == 1
-    assert len(tracker.getJobInfo(jobs[0]).stageIds) == 1
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
-def test_table_shape_and_union(metrics):
+def test_table_shape_and_union(root):
     p = {
         "targets": [
             {"target": "cpu", "type": "table"},
@@ -149,7 +135,7 @@ def test_table_shape_and_union(metrics):
         ],
         "range": {"from": "2024-01-01 00:00:00", "to": "2024-01-01 00:00:01"},
     }
-    out = grafana.handle_query(p, metrics, known_series={"cpu", "mem"})
+    out = grafana.handle_query(p, root, known_series={"cpu", "mem"})
     assert len(out) == 1
     table = out[0]
     assert table["type"] == "table"
@@ -165,15 +151,15 @@ def test_table_shape_and_union(metrics):
     ]
 
 
-def test_unknown_target_dropped(metrics):
+def test_unknown_target_dropped(root):
     p = {
         "targets": [{"target": "nope", "type": "timeseries"}],
         "range": PAYLOAD["range"],
     }
-    assert grafana.handle_query(p, metrics, known_series={"cpu"}) == []
+    assert grafana.handle_query(p, root, known_series={"cpu"}) == []
 
 
-def test_duplicate_target_emitted_once(metrics):
+def test_duplicate_target_emitted_once(root):
     # same target twice in one payload → one series, not doubled rows
     # (ADVICE r1: names list used to grow per occurrence)
     p = dict(
@@ -183,7 +169,7 @@ def test_duplicate_target_emitted_once(metrics):
             {"target": "cpu", "type": "table"},
         ],
     )
-    out = grafana.handle_query(p, metrics, known_series={"cpu"})
+    out = grafana.handle_query(p, root, known_series={"cpu"})
     assert len(out) == 1
     assert out[0]["target"] == "cpu"  # first occurrence's type wins
     assert out[0]["datapoints"] == [
@@ -194,16 +180,68 @@ def test_duplicate_target_emitted_once(metrics):
     ]
 
 
-def test_epoch_ms_range_bounds(metrics):
+def test_epoch_ms_range_bounds(root):
     # Grafana also sends epoch-ms range values (numbers or numeric
     # strings) — must behave exactly like the ISO form (VERDICT r1 #9)
-    iso = grafana.handle_query(PAYLOAD, metrics, known_series={"cpu"})
+    iso = grafana.handle_query(PAYLOAD, root, known_series={"cpu"})
     for form in (
         {"from": 1704067202000, "to": 1704067205000},
         {"from": "1704067202000", "to": "1704067205000"},
     ):
         p = dict(PAYLOAD, range=form)
-        assert grafana.handle_query(p, metrics, known_series={"cpu"}) == iso
+        assert grafana.handle_query(p, root, known_series={"cpu"}) == iso
+
+
+@pytest.mark.parametrize(
+    "bound, utc",
+    [
+        ("2024-W01-1", "2024-01-01T00:00:00Z"),
+        ("20240101T000002", "2024-01-01T00:00:02Z"),
+        ("2024-01-01T05:00:02+05:00", "2024-01-01T00:00:02Z"),
+        ("2023-12-31T19:00:04-05:00", "2024-01-01T00:00:04Z"),
+    ],
+    ids=["iso-week", "basic-format", "plus-offset", "minus-offset"],
+)
+def test_range_bound_forms_answer_as_utc(root, bound, utc):
+    # every form fromisoformat accepts is read as the instant it names:
+    # an offset converts to UTC, as the reference's moment().utc() did
+    def query(t_from):
+        p = dict(PAYLOAD, range={"from": t_from, "to": "2024-01-01T00:00:05Z"})
+        return grafana.handle_query(p, root, known_series={"cpu"})
+
+    want = query(utc)
+    assert want and query(bound) == want
+
+
+def test_pre_epoch_time_floors_to_ms(root):
+    # 1969-12-31 23:59:59.9995 is -0.5 ms: it floors to -1, as
+    # core.epoch_ms (unix_millis) does, not truncates to 0
+    p = {
+        "targets": [{"target": "old"}],
+        "range": {"from": "1969-12-31T23:59:59Z", "to": "1970-01-01T00:00:00Z"},
+    }
+    out = grafana.handle_query(p, root, known_series={"old"})
+    assert out == [{"target": "old", "datapoints": [[1.0, -1]]}]
+
+
+def test_hostile_target_names_read_inside_the_root(root):
+    # with no known series to check against, a name still resolves to
+    # one escaped directory under the root: "cpu/../../outside" joined
+    # unescaped would read the table planted beside the root
+    from timeseries_data_provider_spark.streaming.retention import (
+        series_table,
+        write_series_file,
+    )
+
+    outside = os.path.join(os.path.dirname(root), "outside")
+    os.makedirs(outside, exist_ok=True)
+    write_series_file(
+        series_table([datetime(2024, 1, 1, 0, 0, 3)], [-1.0]),
+        os.path.join(outside, "part-0.parquet"),
+    )
+    for name in ("../x", "a/b", "name=cpu", "cpu/../../outside"):
+        p = dict(PAYLOAD, targets=[{"target": name}])
+        assert grafana.handle_query(p, root) == [], name
 
 
 def test_auth_validator():
@@ -435,3 +473,160 @@ def test_query_times_are_utc_under_any_session_zone(spark, metrics):
         spark.conf.set(key, prior)
     assert got[0] == 200
     assert got[1][0]["datapoints"][0] == [2.0, 1704067202000]
+
+
+def test_serve_needs_one_stored_table(spark, metrics):
+    # serve() keeps only the root directory of the stored table
+    with pytest.raises(ValueError):
+        serve(spark.createDataFrame([(1,)], "x int"), {"cpu"})
+    with pytest.raises(ValueError):
+        serve(metrics.union(metrics), {"cpu"})
+
+
+def test_query_500_is_short_and_logged(spark, tmp_path, caplog):
+    # a corrupt file in a served partition: the client gets the class
+    # and first line of the error, with no stack and no table path; the
+    # full exception is logged once, with the request's targets
+    from timeseries_data_provider_spark.streaming.ingest import read_metrics
+    from timeseries_data_provider_spark.streaming.retention import (
+        series_table,
+        write_series_file,
+    )
+
+    path = str(tmp_path / "metrics")
+    os.makedirs(os.path.join(path, "name=cpu"))
+    write_series_file(
+        series_table([datetime(2024, 1, 1, 0, 0, 2)], [2.0]),
+        os.path.join(path, "name=cpu", "part-0.parquet"),
+    )
+    with open(os.path.join(path, "name=cpu", "part-1.parquet"), "wb") as f:
+        f.write(b"not parquet at all")
+    server, _ = serve(read_metrics(spark, path), {"cpu"})
+    logger = "timeseries_data_provider_spark.serving.http_server"
+    try:
+        with caplog.at_level(logging.WARNING, logger=logger):
+            req = urllib.request.Request(
+                f"http://127.0.0.1:{server.server_address[1]}/query",
+                data=json.dumps(PAYLOAD).encode(),
+                method="POST",
+            )
+            with pytest.raises(urllib.error.HTTPError) as err:
+                urllib.request.urlopen(req)
+    finally:
+        server.shutdown()
+        server.server_close()
+    body = err.value.read()
+    assert err.value.code == 500
+    assert len(body) < 1024
+    assert b"\tat " not in body and path.encode() not in body
+    assert json.loads(body)["error"].startswith("ArrowInvalid: ")
+    records = [
+        r for r in caplog.records if r.name == logger and r.levelno == logging.WARNING
+    ]
+    assert len(records) == 1
+    assert "cpu" in records[0].getMessage() and records[0].exc_info
+
+
+def test_query_sees_what_is_on_disk_now(spark, tmp_path):
+    # a series with no directory yet answers []; a tick made after
+    # serve() is visible to the next /query
+    from timeseries_data_provider_spark.streaming.ingest import (
+        MetricsCollector,
+        read_metrics,
+    )
+
+    bodies = {"a": '{"count": 1}', "b": "{}"}  # b yields no sample yet
+    path = str(tmp_path / "metrics")
+    collector = MetricsCollector(
+        spark,
+        [SourceConfig(name="a", interval=1), SourceConfig(name="b", interval=1)],
+        path,
+        fetcher=lambda src: bodies[src.name],
+    )
+    collector.tick(1_704_067_200.0)
+    server, _ = serve(read_metrics(spark, path), {"a", "b"})
+    port = server.server_address[1]
+    every = {"from": "2024-01-01T00:00:00Z", "to": "2024-01-01T00:01:00Z"}
+    try:
+        only_b = {"targets": [{"target": "b"}], "range": every}
+        assert _post(port, "/query", only_b) == (200, [])
+        bodies.update(a='{"count": 2}', b='{"count": 3}')
+        collector.tick(1_704_067_201.0)
+        both = {"targets": [{"target": "a"}, {"target": "b"}], "range": every}
+        got = _post(port, "/query", both)
+    finally:
+        server.shutdown()
+        server.server_close()
+    assert got == (
+        200,
+        [
+            {
+                "target": "a",
+                "datapoints": [[1.0, 1704067200000], [2.0, 1704067201000]],
+            },
+            {"target": "b", "datapoints": [[3.0, 1704067201000]]},
+        ],
+    )
+
+
+def test_swaps_racing_queries_lose_no_series(spark, tmp_path, monkeypatch):
+    # 50 concurrent /query reads against compaction swaps of the same
+    # series; a delay between listing a partition and reading it makes
+    # every read overlap a swap, so only the swap lock keeps each
+    # listing readable and each series visible. The reads call
+    # handle_query directly: an exception there is what the HTTP
+    # handler answers with 500.
+    import concurrent.futures
+    import threading
+    import time
+
+    from timeseries_data_provider_spark.streaming import retention
+    from timeseries_data_provider_spark.streaming.ingest import MetricsCollector
+
+    names = ["s0", "s1", "s2"]
+    path = str(tmp_path / "metrics")
+    collector = MetricsCollector(
+        spark,
+        [SourceConfig(name=n, interval=1) for n in names],
+        path,
+        fetcher=lambda src: '{"count": 1}',
+    )
+    for t in range(3):
+        collector.tick(1_704_067_200.0 + t)
+    listing = retention._listing
+
+    def slow_listing(part_dir):
+        stored = listing(part_dir)
+        time.sleep(0.05)
+        return stored
+
+    monkeypatch.setattr(retention, "_listing", slow_listing)
+    payload = {
+        "targets": [{"target": n} for n in names],
+        "range": {"from": "2024-01-01T00:00:00Z", "to": "2024-01-01T00:01:00Z"},
+    }
+    done = threading.Event()
+    swaps = []
+
+    def swap_until_done():
+        while not done.is_set():
+            for n in names:
+                retention.apply_retention(spark, path, n, None, 0.0)
+                swaps.append(n)
+
+    swapper = threading.Thread(target=swap_until_done)
+    swapper.start()
+    try:
+        with concurrent.futures.ThreadPoolExecutor(50) as pool:
+            answers = list(
+                pool.map(
+                    lambda _: grafana.handle_query(payload, path, set(names)),
+                    range(50),
+                )
+            )
+    finally:
+        done.set()
+        swapper.join(timeout=60)
+    assert not swapper.is_alive() and len(swaps) >= len(names)
+    points = [[1.0, 1704067200000 + 1000 * t] for t in range(3)]
+    assert answers == [[{"target": n, "datapoints": points} for n in names]] * 50

@@ -22,23 +22,24 @@ Deliberate divergences from reference defects (SURVEY.md §4.3):
    reaches the same outcome by crashing into its catch handler,
    index.js:29-31 + :103).
 
-Spark is not a low-latency point-query server. ``serve()`` holds the
-metrics as a plain, uncached DataFrame over the parquet table, so each
-``/query`` plans and scans the pruned ``name=<s>`` files afresh; every
-response is bounded by ``maxDataPoints``, so the driver-side collect()
-is capped by construction.
+Spark is not a low-latency point-query server, and ``/query`` does not
+use it: the driver writes the metrics table and reads it for
+``/query``; Spark runs the declared queries and the corpus/crawl
+rewrites. Each request lists the requested ``name=<s>`` partitions as
+they are on disk when it arrives (``retention.read_series``), so it
+sees every append and rewrite made before it; every response is
+bounded by ``maxDataPoints`` per series.
 """
 
 from __future__ import annotations
 
 import hmac
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+import pyarrow as pa
 
-from ..operators.core import epoch_ms, query_range
+from ..streaming.retention import read_series
 
 # Fixed table-shape column metadata (index.js:142-146).
 TABLE_COLUMNS = [
@@ -50,17 +51,23 @@ TABLE_COLUMNS = [
 
 class BadQuery(ValueError):
     """A ``/query`` body outside the SimpleJSON request shape. Raised
-    before any Spark work; the HTTP adapter answers it with 400."""
+    before any read; the HTTP adapter answers it with 400."""
 
 
-def _range_bound(raw: Any, default: str) -> str:
-    """Normalize a Grafana range bound to 'yyyy-MM-dd HH:mm:ss[.ffffff]'.
+_EPOCH = datetime(1970, 1, 1)
+_END = datetime(9999, 12, 31)
+
+
+def _range_bound(raw: Any, default: datetime) -> datetime:
+    """A Grafana range bound as a zone-less UTC datetime.
 
     Grafana sends BOTH forms depending on panel/version: ISO-8601
     strings ('2024-01-02T00:00:00.000Z') and epoch-milliseconds
     numbers (or numeric strings). moment() in the reference accepted
-    both (index.js:96-99); so do we (VERDICT r1 #9). Anything else
-    raises BadQuery."""
+    both (index.js:96-99); so do we (VERDICT r1 #9). A bound with a
+    UTC offset is converted to UTC, as the reference's
+    ``moment(...).utc()`` did; one without is UTC already. Anything
+    else raises BadQuery."""
     if raw is None:
         return default
     if isinstance(raw, bool):  # bool is an int subclass — never a time
@@ -69,44 +76,51 @@ def _range_bound(raw: Any, default: str) -> str:
         if isinstance(raw, (int, float)) or (
             isinstance(raw, str) and raw.strip().lstrip("-").isdigit()
         ):
-            ms = int(raw)
-            dt = datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
-            # exact sub-second from integer millis (avoid float rounding)
-            dt = dt.replace(microsecond=(ms % 1000) * 1000)
-            return dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-        bound = str(raw).replace("T", " ").rstrip("Z")
-        datetime.fromisoformat(bound)  # the parser _ns_lit applies
+            # exact from integer millis (no float rounding)
+            return _EPOCH + timedelta(milliseconds=int(raw))
+        bound = datetime.fromisoformat(str(raw))
+        if bound.tzinfo is not None:
+            bound = bound.astimezone(timezone.utc).replace(tzinfo=None)
         return bound
-    except (ValueError, OverflowError, OSError):
+    except (ValueError, OverflowError):
         raise BadQuery(f"unparseable range bound {raw!r}") from None
+
+
+def _points(stored: pa.Table, max_points: int | None) -> list[list[Any]]:
+    """``[value, epoch ms]`` pairs ordered on ``(time, value)``, the
+    earliest ``max_points`` of them. The stored µs times floor to ms,
+    as ``core.epoch_ms`` does, before 1970 too."""
+    rows = stored.sort_by([("time", "ascending"), ("value", "ascending")])
+    if max_points is not None:
+        rows = rows.slice(0, max_points)
+    micros = rows.column("time").cast(pa.int64()).to_pylist()
+    return [
+        [v, us // 1000]
+        for v, us in zip(rows.column("value").to_pylist(), micros)
+    ]
 
 
 def handle_query(
     payload: dict[str, Any],
-    metrics: DataFrame,
+    root: str,
     known_series: set[str] | None = None,
 ) -> list[dict[str, Any]]:
-    """`/query` (index.js:86-157).
+    """`/query` (index.js:86-157) over the metrics table at ``root``.
 
     payload: ``{targets: [{target, type}], range: {from, to},
     maxDataPoints}`` — the Grafana SimpleJSON request shape.
 
-    All requested series run as ONE Spark job (name IN (...) with
-    partition pruning) instead of the reference's per-target fan-out
-    (index.js:97-110); the collect() is the Promise.all barrier. With
-    ``maxDataPoints`` that job is also one stage and one task: the
-    pruned, filtered scan is coalesced to one partition before the
-    per-series cap, so the cap's window needs no Exchange.
-
-    Scale: after a retention pass a series is one file, which is one
-    scan task already, so the coalesce only serialises the k targets
-    of one panel (a handful); the output is at most
-    ``k × maxDataPoints`` rows either way.
+    The requested series are read on the driver, each from its own
+    partition directory and only the row groups the range can touch;
+    no Spark job runs. As in the reference's InfluxQL
+    (index.js:106), bounds are inclusive at both ends and the
+    ``maxDataPoints`` cap keeps each series' earliest points; ties on
+    time break on value, so the capped point set is deterministic.
 
     A body of any other shape (not an object, non-list ``targets``,
     non-object targets or ``range``, an unparseable range bound, a
     ``maxDataPoints`` that is not a positive integer) raises BadQuery
-    before any Spark work.
+    before any read.
     """
     if not isinstance(payload, dict):
         raise BadQuery("/query body must be a JSON object")
@@ -118,8 +132,8 @@ def handle_query(
         raise BadQuery("targets must be a list of objects")
     if not isinstance(rng, dict):
         raise BadQuery("range must be an object")
-    t_from = _range_bound(rng.get("from"), "1970-01-01 00:00:00")
-    t_to = _range_bound(rng.get("to"), "9999-12-31 00:00:00")
+    t_from = _range_bound(rng.get("from"), _EPOCH)
+    t_to = _range_bound(rng.get("to"), _END)
     max_points = payload.get("maxDataPoints")
     if max_points is not None and (
         isinstance(max_points, bool)
@@ -132,8 +146,8 @@ def handle_query(
     names: list[str] = []
     for t in targets:
         name = t.get("target")
-        if not name:
-            continue
+        if not name or not isinstance(name, str):
+            continue  # no series is named by anything but a string
         if known_series is not None and name not in known_series:
             continue  # explicit unknown/inactive drop (divergence 3)
         if name in target_types:
@@ -146,51 +160,16 @@ def handle_query(
     if not names:
         return []
 
-    # ONE scan for every requested series (the docstring's contract —
-    # review finding: this used to build one query_range subtree PER
-    # target and union them, N scans of the source per /query): the
-    # name IN (...) predicate prunes partitions, and the per-series
-    # maxDataPoints cap is a window rank over the pruned rows instead
-    # of a per-target global limit. Ties beyond (time) break on the
-    # value column so the capped point set is deterministic (the
-    # metrics schema has no row id; full-duplicate rows are then
-    # interchangeable). The coalesce sits above the pruned, pushed-down
-    # scan; its single partition already satisfies the window's
-    # clustering on name, so the planner adds no Exchange and the
-    # row_number filter still becomes a WindowGroupLimit.
-    from pyspark.sql import Window
-
-    # METRICS_SCHEMA's series and time columns
-    df = query_range(metrics, names, t_from, t_to, None, "name", "time")
-    if max_points is not None:
-        w = Window.partitionBy("name").orderBy("time", "value")
-        df = (
-            df.coalesce(1)
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= max_points)
-            .drop("__rn")
-        )
-    union = df.select("name", "value", epoch_ms(F.col("time")))
-
-    grouped: dict[str, list[list[Any]]] = {n: [] for n in names}
-    for row in union.collect():
-        grouped[row["name"]].append([row["value"], row["ms"]])
-    # InfluxQL results are implicitly time-ASC (the reference relied on
-    # that, index.js:106); a distributed collect is not — sort here.
-    for points in grouped.values():
-        points.sort(key=lambda p: p[1])
-
     response: list[dict[str, Any]] = []
     table_rows: list[list[Any]] = []
-    for name in names:
-        datapoints = grouped.get(name, [])
+    for name, stored in zip(names, read_series(root, names, t_from, t_to)):
+        datapoints = _points(stored, max_points)
         if target_types[name] == "table":
             # prepend series name (index.js:131-135); UNION across
             # table targets (divergence 1)
-            table_rows.extend([[name, v, ms] for v, ms in datapoints])
-        else:
-            if datapoints:
-                response.append({"target": name, "datapoints": datapoints})
+            table_rows.extend([name, v, ms] for v, ms in datapoints)
+        elif datapoints:
+            response.append({"target": name, "datapoints": datapoints})
     if table_rows:
         response.append(
             {"columns": TABLE_COLUMNS, "rows": table_rows, "type": "table"}

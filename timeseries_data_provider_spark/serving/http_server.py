@@ -1,21 +1,31 @@
 """Thin stdlib HTTP adapter exposing the Grafana JSON-datasource routes
-(reference hapi server, /root/reference/index.js:51-187). Non-Spark by
-design (SURVEY.md §7 step 5) — it calls the serving functions, which own
-the Spark work.
+(the reference's hapi server, index.js:51-187). It runs no Spark job:
+the driver writes the metrics table and reads it for ``/query``; Spark
+runs the declared queries and the corpus/crawl rewrites. ``serve()``
+takes the table's root directory from the frame it is given, once, and
+each ``/query`` reads the requested series from there as they are on
+disk at that moment.
+
+A request that fails unexpectedly gets HTTP 500 with the exception's
+class and first line, the table root masked; the full exception goes
+to this module's logger at WARNING, with the request's targets.
 """
 
 from __future__ import annotations
 
 import base64
 import json
+import logging
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
-from ..session import ensure_runtime_confs
 from . import grafana
+
+log = logging.getLogger(__name__)
 
 # the reference's stub routes (index.js:159-181) always answer []
 STUB_ROUTES = ("/annotations", "/tag-keys", "/tag-values")
@@ -23,8 +33,27 @@ STUB_ROUTES = ("/annotations", "/tag-keys", "/tag-values")
 MAX_BODY_BYTES = 1 << 20
 
 
+def table_root(metrics: DataFrame) -> str:
+    """The local root directory of the stored parquet table that
+    ``metrics`` reads, as ``read_metrics`` returns it. Any other frame
+    raises ValueError."""
+    leaves = metrics._jdf.queryExecution().analyzed().collectLeaves()
+    try:
+        relation = leaves.head().relation()
+        paths = relation.location().rootPaths()
+        parquet = relation.fileFormat().toString() == "Parquet"
+    except Py4JError:
+        parquet = False
+    if not parquet or leaves.size() != 1 or paths.size() != 1:
+        raise ValueError("serve() needs a frame over one stored parquet table")
+    uri = paths.head().toUri()
+    if uri.getScheme() != "file":
+        raise ValueError(f"serve() reads local tables only, not {uri}")
+    return uri.getPath()
+
+
 def make_handler(
-    metrics: DataFrame,
+    root: str,
     known_series: set[str],
     auth_config: dict[str, Any] | None = None,
 ):
@@ -74,6 +103,7 @@ def make_handler(
                 return self._send(400, {"error": "invalid Content-Length"})
             if n > MAX_BODY_BYTES:
                 return self._send(413, {"error": "request body too large"})
+            payload = None
             try:
                 raw = self.rfile.read(n) if n else b""
                 try:
@@ -85,7 +115,7 @@ def make_handler(
                 if self.path == "/query":
                     return self._send(
                         200,
-                        grafana.handle_query(payload, metrics, known_series),
+                        grafana.handle_query(payload, root, known_series),
                     )
                 if self.path in STUB_ROUTES:
                     return self._send(200, [])
@@ -95,7 +125,14 @@ def make_handler(
             except Exception as exc:
                 # divergence 2: real error response, not a swallowed
                 # exception (reference index.js:153-155)
-                self._send(500, {"error": str(exc)})
+                targets = (
+                    payload.get("targets") if isinstance(payload, dict) else None
+                )
+                log.warning(
+                    "%s failed, targets %r", self.path, targets, exc_info=True
+                )
+                first = str(exc).partition("\n")[0].replace(root, "<table>")
+                self._send(500, {"error": f"{type(exc).__name__}: {first}"})
 
     return Handler
 
@@ -107,11 +144,10 @@ def serve(
     auth_config: dict[str, Any] | None = None,
 ) -> tuple[ThreadingHTTPServer, threading.Thread]:
     """Start the server on a background thread; returns (server,
-    thread). ``server.server_address[1]`` is the bound port. The
-    served frame's session gets the engine's runtime confs first:
-    ``/query`` renders stored NTZ times through the session zone."""
-    ensure_runtime_confs(metrics.sparkSession)
-    handler = make_handler(metrics, known_series, auth_config)
+    thread). ``server.server_address[1]`` is the bound port.
+    ``metrics`` is the stored table as ``read_metrics`` returns it; only
+    its root directory is kept (``table_root``)."""
+    handler = make_handler(table_root(metrics), known_series, auth_config)
     server = ThreadingHTTPServer(("127.0.0.1", port), handler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()

@@ -15,7 +15,7 @@ Mapping (SURVEY.md §3.2):
 - writePoints with no timestamp (index.js:250-257) → append of
   ``(name, time=now, value)`` — ingest-time stamping preserved, so
   event-time == processing-time and late data cannot exist (SURVEY §1.1).
-  The driver writes the metrics table and Spark reads it (``/query``):
+  The driver writes the metrics table and reads it for ``/query``:
   the tick builds its samples into a ``pyarrow.Table`` and writes each
   series' row as one parquet file into that series' partition
   directory, with no Spark job. Each file is written aside under
@@ -109,7 +109,6 @@ class MetricsCollector:
             for s in sources
             if s.active and s.interval > 0
         }
-        self.entries = {name: series_entry(spark, name) for name in self.state}
         # a swap cut off between its two renames left the series aside,
         # and an append cut off before its rename left a file there
         recover_swaps(table_path)
@@ -163,7 +162,7 @@ class MetricsCollector:
             aside = os.path.join(self.table_path, SWAP_DIR)
             os.makedirs(aside, exist_ok=True)
             for i, name in enumerate(names):
-                entry = self.entries[name]
+                entry = series_entry(name)
                 tag = uuid.uuid4().hex
                 new = os.path.join(aside, f"{entry}.{tag}.tmp")
                 write_series_file(batch.slice(i, 1), new)
