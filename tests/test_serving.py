@@ -12,7 +12,7 @@ import logging
 import os
 import socket
 import urllib.request
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
 
@@ -630,3 +630,274 @@ def test_swaps_racing_queries_lose_no_series(spark, tmp_path, monkeypatch):
     assert not swapper.is_alive() and len(swaps) >= len(names)
     points = [[1.0, 1704067200000 + 1000 * t] for t in range(3)]
     assert answers == [[{"target": n, "datapoints": points} for n in names]] * 50
+
+
+def test_burst_of_50_connections_all_answered(metrics):
+    # 50 panel refreshes connect at once: each must get its answer, not
+    # a connection reset from an overflowing listen backlog
+    import concurrent.futures
+    import threading
+
+    server, _ = serve(metrics, {"cpu"})
+    start = threading.Barrier(50)
+
+    def refresh(_):
+        start.wait(timeout=30)
+        return _post(server.server_address[1], "/query", PAYLOAD)
+
+    try:
+        with concurrent.futures.ThreadPoolExecutor(50) as pool:
+            answers = list(pool.map(refresh, range(50)))
+    finally:
+        server.shutdown()
+        server.server_close()
+    points = [[float(s), 1704067200000 + 1000 * s] for s in range(2, 6)]
+    assert answers == [(200, [{"target": "cpu", "datapoints": points}])] * 50
+
+
+def test_each_request_logs_one_line(metrics, caplog):
+    # the stdlib request line, one INFO record per answer: client,
+    # request line, status and body size
+    server, _ = serve(metrics, {"cpu"})
+    port = server.server_address[1]
+    logger = "timeseries_data_provider_spark.serving.http_server"
+    try:
+        with caplog.at_level(logging.INFO, logger=logger):
+            _post(port, "/query", PAYLOAD)
+            _post(port, "/search", {})
+            _post(port, "/nowhere", {})
+    finally:
+        server.shutdown()
+        server.server_close()
+    lines = [r.getMessage() for r in caplog.records if r.name == logger]
+    assert len(lines) == 3
+    for line, path, status in zip(
+        lines, ["/query", "/search", "/nowhere"], [200, 200, 404]
+    ):
+        assert line.startswith("127.0.0.1 ")
+        assert f'"POST {path} HTTP/1.1" {status} ' in line
+
+
+# The /query cache: each test starts from an empty cache of its own.
+
+
+@pytest.fixture
+def cache(monkeypatch):
+    from timeseries_data_provider_spark.streaming import retention
+
+    fresh = retention._RowCache()
+    monkeypatch.setattr(retention, "_CACHE", fresh)
+    return fresh
+
+
+def _write(path, seconds, values, **kwargs):
+    """One series file at ``path``: points at 2024-01-01 + ``seconds``."""
+    import pyarrow.parquet as pq
+
+    from timeseries_data_provider_spark.streaming.retention import (
+        series_table,
+    )
+
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    times = [datetime(2024, 1, 1) + timedelta(seconds=s) for s in seconds]
+    pq.write_table(
+        series_table(times, values), path, store_schema=False, **kwargs
+    )
+
+
+def _uncached(part_dir, t_from, t_to, cap):
+    """The reference answer: a filtered scan of the whole partition,
+    sorted on (time, value), capped."""
+    import pyarrow.dataset as ds
+
+    from timeseries_data_provider_spark.streaming.retention import (
+        _ARROW_SCHEMA,
+    )
+
+    if not os.path.isdir(part_dir):
+        return []
+    keep = (ds.field("time") >= t_from) & (ds.field("time") <= t_to)
+    rows = (
+        ds.dataset(part_dir, schema=_ARROW_SCHEMA, format="parquet")
+        .to_table(filter=keep)
+        .sort_by([("time", "ascending"), ("value", "ascending")])
+        .slice(0, cap)
+    )
+    return [
+        [v, (t - datetime(1970, 1, 1)) // timedelta(milliseconds=1)]
+        for t, v in zip(
+            rows.column("time").to_pylist(), rows.column("value").to_pylist()
+        )
+    ]
+
+
+def _cached_paths(cache):
+    return {key[0] for part in cache.parts.values() for key in part}
+
+
+def test_swapped_and_trimmed_series_never_read_old_files(spark, tmp_path, cache):
+    # appends, then a compaction swap, then a retention trim: each
+    # /query returns exactly the rows on disk, and the cache keeps only
+    # the files of the current listing
+    from timeseries_data_provider_spark.streaming import retention
+    from timeseries_data_provider_spark.streaming.ingest import MetricsCollector
+
+    path = str(tmp_path / "metrics")
+    count = iter(range(1, 100))
+    collector = MetricsCollector(
+        spark,
+        [SourceConfig(name="a", interval=1)],
+        path,
+        fetcher=lambda src: json.dumps({"count": next(count)}),
+    )
+    t0 = 1_704_067_200
+    for t in range(5):
+        collector.tick(t0 + t)
+    payload = {
+        "targets": [{"target": "a"}],
+        "range": {"from": "2024-01-01T00:00:00Z", "to": "2024-01-01T00:01:00Z"},
+    }
+    part = os.path.join(path, retention.series_entry("a"))
+
+    def answer():
+        got = grafana.handle_query(payload, path, {"a"})
+        assert _cached_paths(cache) <= {
+            os.path.join(part, f) for f in os.listdir(part)
+        }
+        return got[0]["datapoints"] if got else []
+
+    every = [[float(t + 1), (t0 + t) * 1000] for t in range(5)]
+    assert answer() == every and len(_cached_paths(cache)) == 5
+    retention.apply_retention(spark, path, "a", None, 0.0)
+    assert answer() == every and len(_cached_paths(cache)) == 1
+    retention.apply_retention(spark, path, "a", 2, t0 + 4.0)
+    assert answer() == every[2:] and len(_cached_paths(cache)) == 1
+    retention.apply_retention(spark, path, "a", 0, t0 + 60.0)
+    assert answer() == [] and len(_cached_paths(cache)) == 1
+
+
+def test_file_rewritten_in_place_is_read_again(spark, tmp_path, cache):
+    from timeseries_data_provider_spark.streaming.retention import series_entry
+
+    root = str(tmp_path / "metrics")
+    part = os.path.join(root, series_entry("cpu"))
+    # a series with no directory answers [] and leaves no cache entry
+    assert grafana.handle_query(PAYLOAD, root) == [] and not cache.parts
+    _write(os.path.join(part, "part-0.parquet"), [2, 3], [2.0, 3.0])
+    t = [1704067200000 + 1000 * s for s in range(7)]
+    assert grafana.handle_query(PAYLOAD, root) == [
+        {"target": "cpu", "datapoints": [[2.0, t[2]], [3.0, t[3]]]}
+    ]
+    _write(os.path.join(part, "part-0.parquet"), [4, 5, 6], [40.0, 50.0, 60.0])
+    assert grafana.handle_query(PAYLOAD, root) == [
+        {"target": "cpu", "datapoints": [[40.0, t[4]], [50.0, t[5]]]}
+    ]
+
+
+def test_cache_stays_within_its_budget(spark, tmp_path, cache, monkeypatch):
+    # more threads than cores, a short switch interval, and a budget of
+    # a few row groups: after every answer the byte total is within the
+    # budget and equals the bytes the cache holds, and every answer is
+    # the uncached one
+    import concurrent.futures
+    import random
+    import sys
+
+    from timeseries_data_provider_spark.streaming import retention
+
+    monkeypatch.setattr(retention, "CACHE_BYTES", 10_000)
+    root = str(tmp_path / "metrics")
+    names = [f"s{i}" for i in range(6)]
+    for i, name in enumerate(names):
+        part = os.path.join(root, retention.series_entry(name))
+        seconds = list(range(0, 2000, 2))
+        values = [float((s * 7 + i) % 11) for s in seconds]
+        _write(os.path.join(part, "part-0.parquet"), seconds, values,
+               row_group_size=250)
+        # an append tied on time with the compacted file
+        _write(os.path.join(part, "part-1.parquet"), [10, 11], [-1.0, 5.0])
+    rng = random.Random(7)
+    requests = []
+    for _ in range(160):
+        lo = rng.randrange(0, 2000)
+        hi = lo + rng.choice([0, 30, 400, 1500])
+        cap = rng.choice([None, 1, 7, 300])
+        picked = rng.sample(names, rng.randint(1, 3))
+        requests.append((picked, lo, hi, cap))
+
+    def run(request):
+        picked, lo, hi, cap = request
+        t_from = datetime(2024, 1, 1) + timedelta(seconds=lo)
+        t_to = datetime(2024, 1, 1) + timedelta(seconds=hi)
+        payload = {
+            "targets": [{"target": n} for n in picked],
+            "range": {"from": t_from.isoformat(), "to": t_to.isoformat()},
+            "maxDataPoints": cap,
+        }
+        got = grafana.handle_query(payload, root, set(names))
+        with cache.lock:
+            held = retention._nbytes(
+                {k: f for part in cache.parts.values() for k, f in part.items()}
+            )
+            totals = (cache.nbytes, held)
+        want = []
+        for n in picked:
+            part = os.path.join(root, retention.series_entry(n))
+            points = _uncached(part, t_from, t_to, cap)
+            if points:
+                want.append({"target": n, "datapoints": points})
+        return got == want, totals
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with concurrent.futures.ThreadPoolExecutor(16) as pool:
+            results = list(pool.map(run, requests))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(same for same, _ in results)
+    assert all(n == held <= 10_000 for _, (n, held) in results)
+    assert max(n for _, (n, _) in results) > 0
+
+
+def test_cap_through_a_tie_across_files_keeps_smaller_values(spark, tmp_path, cache):
+    # a compacted file and two appends, all at 00:00:03: the cap cuts
+    # through the tie and keeps the smaller values, as the uncached
+    # sort does
+    from timeseries_data_provider_spark.streaming import retention
+
+    root = str(tmp_path / "metrics")
+    part = os.path.join(root, retention.series_entry("cpu"))
+    _write(os.path.join(part, "part-c.parquet"), [2, 3, 3, 4], [5.0, 9.0, 6.0, 1.0])
+    _write(os.path.join(part, "part-a1.parquet"), [3], [8.0])
+    _write(os.path.join(part, "part-a2.parquet"), [3], [7.0])
+    t2, t3 = 1704067202000, 1704067203000
+    for cap, want in [
+        (2, [[5.0, t2], [6.0, t3]]),
+        (4, [[5.0, t2], [6.0, t3], [7.0, t3], [8.0, t3]]),
+    ]:
+        got = grafana.handle_query(dict(PAYLOAD, maxDataPoints=cap), root)
+        assert got == [{"target": "cpu", "datapoints": want}]
+        assert want == _uncached(
+            part, datetime(2024, 1, 1, 0, 0, 2), datetime(2024, 1, 1, 0, 0, 5), cap
+        )
+
+
+def test_query_decodes_only_overlapping_row_groups(spark, tmp_path, cache):
+    # ten row groups of 1000 points; a range inside the fourth decodes
+    # that one row group alone: 1000 times and values of 8 bytes each
+    from timeseries_data_provider_spark.streaming import retention
+
+    root = str(tmp_path / "metrics")
+    part = os.path.join(root, retention.series_entry("cpu"))
+    _write(os.path.join(part, "part-0.parquet"), range(10_000),
+           [float(s) for s in range(10_000)], row_group_size=1000)
+    payload = dict(
+        PAYLOAD,
+        range={"from": "2024-01-01T00:50:10Z", "to": "2024-01-01T00:50:12Z"},
+    )
+    points = [[float(s), 1704067200000 + 1000 * s] for s in (3010, 3011, 3012)]
+    assert grafana.handle_query(payload, root) == [
+        {"target": "cpu", "datapoints": points}
+    ]
+    assert cache.nbytes == 1000 * 16

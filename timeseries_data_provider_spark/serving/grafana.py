@@ -28,7 +28,9 @@ use it: the driver writes the metrics table and reads it for
 rewrites. Each request lists the requested ``name=<s>`` partitions as
 they are on disk when it arrives (``retention.read_series``), so it
 sees every append and rewrite made before it; every response is
-bounded by ``maxDataPoints`` per series.
+bounded by ``maxDataPoints`` per series. The rows come sorted and
+capped from ``read_series``'s cache of decoded files, so a repeated
+panel refresh decodes nothing; this module only shapes them.
 """
 
 from __future__ import annotations
@@ -86,18 +88,13 @@ def _range_bound(raw: Any, default: datetime) -> datetime:
         raise BadQuery(f"unparseable range bound {raw!r}") from None
 
 
-def _points(stored: pa.Table, max_points: int | None) -> list[list[Any]]:
-    """``[value, epoch ms]`` pairs ordered on ``(time, value)``, the
-    earliest ``max_points`` of them. The stored µs times floor to ms,
-    as ``core.epoch_ms`` does, before 1970 too."""
-    rows = stored.sort_by([("time", "ascending"), ("value", "ascending")])
-    if max_points is not None:
-        rows = rows.slice(0, max_points)
-    micros = rows.column("time").cast(pa.int64()).to_pylist()
-    return [
-        [v, us // 1000]
-        for v, us in zip(rows.column("value").to_pylist(), micros)
-    ]
+def _points(stored: pa.Table) -> list[list[Any]]:
+    """``[value, epoch ms]`` pairs of rows as ``read_series`` returns
+    them. The stored µs times floor to ms, as ``core.epoch_ms`` does,
+    before 1970 too."""
+    ms = stored.column("time").cast(pa.int64()).to_numpy() // 1000
+    values = stored.column("value").to_numpy()
+    return [[v, t] for v, t in zip(values.tolist(), ms.tolist())]
 
 
 def handle_query(
@@ -111,11 +108,12 @@ def handle_query(
     maxDataPoints}`` — the Grafana SimpleJSON request shape.
 
     The requested series are read on the driver, each from its own
-    partition directory and only the row groups the range can touch;
-    no Spark job runs. As in the reference's InfluxQL
-    (index.js:106), bounds are inclusive at both ends and the
-    ``maxDataPoints`` cap keeps each series' earliest points; ties on
-    time break on value, so the capped point set is deterministic.
+    partition directory and only the row groups the range can touch,
+    decoded once and then cached; no Spark job runs. As in the
+    reference's InfluxQL (index.js:106), bounds are inclusive at both
+    ends and the ``maxDataPoints`` cap keeps each series' earliest
+    points; ties on time break on value, so the capped point set is
+    deterministic.
 
     A body of any other shape (not an object, non-list ``targets``,
     non-object targets or ``range``, an unparseable range bound, a
@@ -162,8 +160,9 @@ def handle_query(
 
     response: list[dict[str, Any]] = []
     table_rows: list[list[Any]] = []
-    for name, stored in zip(names, read_series(root, names, t_from, t_to)):
-        datapoints = _points(stored, max_points)
+    stored = read_series(root, names, t_from, t_to, max_points)
+    for name, rows in zip(names, stored):
+        datapoints = _points(rows)
         if target_types[name] == "table":
             # prepend series name (index.js:131-135); UNION across
             # table targets (divergence 1)

@@ -8,7 +8,9 @@ disk at that moment.
 
 A request that fails unexpectedly gets HTTP 500 with the exception's
 class and first line, the table root masked; the full exception goes
-to this module's logger at WARNING, with the request's targets.
+to this module's logger at WARNING, with the request's targets. Every
+answer is logged there at INFO as the stdlib request line: client,
+request line, status and body size.
 """
 
 from __future__ import annotations
@@ -60,8 +62,11 @@ def make_handler(
     validate = grafana.basic_auth_validator(auth_config or {"enabled": False})
 
     class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *args) -> None:  # quiet
-            pass
+        def log_message(self, format: str, *args: Any) -> None:
+            log.info("%s " + format, self.address_string(), *args)
+
+        def log_request(self, code: Any = "-", size: Any = "-") -> None:
+            pass  # _send logs each answer, with its size
 
         def _authorized(self) -> bool:
             if not (auth_config or {}).get("enabled", False):
@@ -79,6 +84,7 @@ def make_handler(
 
         def _send(self, code: int, body: Any) -> None:
             data = json.dumps(body).encode()
+            super().log_request(code, len(data))
             self.send_response(code)
             self.send_header("Content-Type", "application/json")
             self.send_header("Content-Length", str(len(data)))
@@ -137,6 +143,12 @@ def make_handler(
     return Handler
 
 
+class _Server(ThreadingHTTPServer):
+    # socketserver's listen backlog of 5 resets the connections of a
+    # burst of panel refreshes before any handler runs
+    request_queue_size = 128
+
+
 def serve(
     metrics: DataFrame,
     known_series: set[str],
@@ -148,7 +160,7 @@ def serve(
     ``metrics`` is the stored table as ``read_metrics`` returns it; only
     its root directory is kept (``table_root``)."""
     handler = make_handler(table_root(metrics), known_series, auth_config)
-    server = ThreadingHTTPServer(("127.0.0.1", port), handler)
+    server = _Server(("127.0.0.1", port), handler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server, thread

@@ -52,6 +52,20 @@ between the renames. The append takes no lock: it renames in a whole
 new file, which a read sees entirely or not at all. The lock covers
 one process; a reader in another process still races the swap.
 
+``read_series`` answers from one process-wide cache of decoded rows,
+which, like the lock, covers one process. A stored file is never
+changed once written (appends and rewrites rename in new uuid-named
+files), so a file's rows are cached under the key
+``(path, size, mtime_ns)``, taken from the listing. The cached unit is
+one row group, sorted on ``(time, value)`` when it is decoded, with the
+footer's per-row-group ``time`` min/max kept beside it; a read decodes
+only the row groups whose bounds overlap its range, and cuts each one
+by binary search on its µs times. Every read replaces its partition's
+entry with the files it just listed, so a swapped or trimmed partition
+drops its old files at once. The decoded arrays of all partitions stay
+under ``CACHE_BYTES``; past it, whole partitions are evicted, least
+recently read first.
+
 CONCURRENCY CONTRACT (review finding): the swap is NOT safe against a
 concurrent WRITER — a file appended to the dataset between the
 rewrite's scan and the rename is swept aside with the old copy and
@@ -70,10 +84,12 @@ import os
 import shutil
 import threading
 import uuid
+from collections import OrderedDict
 from contextlib import contextmanager
 from datetime import datetime, timedelta, timezone
 from typing import Callable, Iterator
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
@@ -106,6 +122,9 @@ _ARROW_SCHEMA = to_arrow_schema(SERIES_SCHEMA)
 # aside copies live inside the root: partition discovery skips
 # dot-prefixed directories, and recovery stays scoped to one root
 SWAP_DIR = ".swap"
+
+# the most decoded bytes the /query cache holds, over all partitions
+CACHE_BYTES = 256 << 20
 
 
 class _SharedLock:
@@ -172,32 +191,186 @@ def write_series_file(table: pa.Table, path: str) -> None:
     pq.write_table(table, path, store_schema=False)
 
 
-def _listing(part_dir: str) -> ds.Dataset | None:
-    """The files of one series partition, as listed now (dataset
-    discovery skips Spark's ``_SUCCESS`` and ``.crc`` side files);
-    None if the series has no directory yet."""
+# A stored file as a listing names it, which is also its cache key:
+# (path, size in bytes, mtime in ns).
+FileKey = tuple[str, int, int]
+# A decoded row group: its µs times and values, sorted on (time, value).
+Rows = tuple[np.ndarray, np.ndarray]
+
+
+def _listing(part_dir: str) -> list[FileKey] | None:
+    """The files of one series partition, as listed now, skipping
+    Spark's ``_SUCCESS`` and ``.crc`` side files as dataset discovery
+    does; None if the series has no directory yet."""
     try:
-        return ds.dataset(part_dir, schema=_ARROW_SCHEMA, format="parquet")
+        with os.scandir(part_dir) as entries:
+            return [
+                (e.path, st.st_size, st.st_mtime_ns)
+                for e in entries
+                if not e.name.startswith(("_", ".")) and e.is_file()
+                for st in (e.stat(),)
+            ]
     except FileNotFoundError:
         return None
 
 
+class _File:
+    """What the cache holds of one stored file: each row group's
+    ``(min, max)`` µs time from the footer (None when the footer has no
+    statistics), and the row groups decoded so far, by index."""
+
+    __slots__ = ("bounds", "groups")
+
+    def __init__(self, bounds: list[tuple[int, int] | None]) -> None:
+        self.bounds = bounds
+        self.groups: dict[int, Rows] = {}
+
+
+def _nbytes(files: dict[FileKey, _File]) -> int:
+    return sum(
+        t.nbytes + v.nbytes for f in files.values() for t, v in f.groups.values()
+    )
+
+
+def _time_bounds(meta: pq.FileMetaData) -> list[tuple[int, int] | None]:
+    col = meta.schema.names.index("time")
+    bounds = []
+    for i in range(meta.num_row_groups):
+        stats = meta.row_group(i).column(col).statistics
+        if stats is None or not stats.has_min_max:
+            bounds.append(None)
+            continue
+        lo, hi = pa.array([stats.min, stats.max], _ARROW_SCHEMA.field("time").type)
+        bounds.append((lo.value, hi.value))
+    return bounds
+
+
+def _decode(stored: pq.ParquetFile, group: int) -> Rows:
+    rows = stored.read_row_group(group, columns=["time", "value"])
+    times = rows.column("time").cast(_ARROW_SCHEMA.field("time").type)
+    times = times.cast(pa.int64()).to_numpy()
+    values = rows.column("value").cast(pa.float64()).to_numpy()
+    if len(times) > 1 and not (times[1:] > times[:-1]).all():
+        order = np.lexsort((values, times))
+        times, values = times[order], values[order]
+    return times, values
+
+
+class _RowCache:
+    """Decoded row groups of stored files, per partition directory, in
+    least-recently-read order. ``lock`` guards every field and every
+    ``_File`` reachable from ``parts``; decodes run outside it."""
+
+    def __init__(self) -> None:
+        self.lock = threading.Lock()
+        self.parts: OrderedDict[str, dict[FileKey, _File]] = OrderedDict()
+        self.nbytes = 0
+
+    def read(
+        self, part_dir: str, listed: list[FileKey], lo: int, hi: int,
+        cap: int | None,
+    ) -> Rows:
+        """The rows of the listed files with ``lo <= time <= hi`` (µs),
+        sorted on ``(time, value)``, the first ``cap`` of them."""
+        # the partition's entry becomes the listed files, most recent;
+        # a partition with no files keeps no entry
+        with self.lock:
+            cached = self.parts.pop(part_dir, {})
+            part = {key: cached.pop(key) for key in listed if key in cached}
+            self.nbytes -= _nbytes(cached)
+            if listed:
+                self.parts[part_dir] = part
+            known = {key: (f, dict(f.groups)) for key, f in part.items()}
+        # footers of new files and row groups in range not yet decoded
+        fresh: dict[FileKey, _File] = {}
+        decoded: list[tuple[FileKey, int, Rows]] = []
+        slices: list[Rows] = []
+        for key in listed:
+            f, groups = known.get(key, (None, {}))
+            stored = None
+            try:
+                if f is None:
+                    stored = pq.ParquetFile(key[0])
+                    f = fresh[key] = _File(_time_bounds(stored.metadata))
+                for i, bound in enumerate(f.bounds):
+                    if bound is not None and (bound[1] < lo or bound[0] > hi):
+                        continue
+                    rows = groups.get(i)
+                    if rows is None:
+                        if stored is None:
+                            stored = pq.ParquetFile(key[0])
+                        rows = _decode(stored, i)
+                        decoded.append((key, i, rows))
+                    slices.append(_cut(rows, lo, hi, cap))
+            finally:
+                if stored is not None:
+                    stored.close()
+        # kept unless another read has replaced the entry meanwhile;
+        # only the read that made an entry adds to it
+        with self.lock:
+            if self.parts.get(part_dir) is part:
+                part.update(fresh)
+                for key, i, rows in decoded:
+                    part[key].groups[i] = rows
+                    self.nbytes += rows[0].nbytes + rows[1].nbytes
+            while self.nbytes > CACHE_BYTES:
+                self.nbytes -= _nbytes(self.parts.popitem(last=False)[1])
+        return _merge([s for s in slices if len(s[0])], cap)
+
+
+def _cut(rows: Rows, lo: int, hi: int, cap: int | None) -> Rows:
+    times, values = rows
+    start = times.searchsorted(lo, "left")
+    end = times.searchsorted(hi, "right")
+    if cap is not None:
+        end = min(end, start + cap)
+    return times[start:end], values[start:end]
+
+
+def _merge(slices: list[Rows], cap: int | None) -> Rows:
+    if not slices:
+        return np.empty(0, np.int64), np.empty(0, np.float64)
+    if len(slices) == 1:
+        return slices[0]
+    times = np.concatenate([t for t, _ in slices])
+    values = np.concatenate([v for _, v in slices])
+    order = np.lexsort((values, times))[:cap]
+    return times[order], values[order]
+
+
+_CACHE = _RowCache()
+
+
+def _micros(t: datetime) -> int:
+    return (t - datetime(1970, 1, 1)) // timedelta(microseconds=1)
+
+
 def read_series(
-    root: str, names: list[str], t_from: datetime, t_to: datetime
+    root: str,
+    names: list[str],
+    t_from: datetime,
+    t_to: datetime,
+    max_points: int | None = None,
 ) -> list[pa.Table]:
     """The stored rows of each series in ``names``, in that order, with
     ``t_from <= time <= t_to`` (zone-less UTC, inclusive at both ends,
-    as ``core.query_range``), read on the driver from the partitions as
-    they are on disk when the call lists them. A series with no
-    directory reads empty. Rows come in file order: sort them."""
+    as ``core.query_range``), sorted on ``(time, value)`` and cut to
+    the first ``max_points``. They are read on the driver from the
+    partitions as they are on disk when the call lists them, through
+    the cache. A series with no directory reads empty."""
     dirs = [os.path.join(root, series_entry(name)) for name in names]
-    keep = (ds.field("time") >= t_from) & (ds.field("time") <= t_to)
+    lo, hi = _micros(t_from), _micros(t_to)
+    out = []
     with _SWAP_LOCK.shared():
-        stored = [_listing(d) for d in dirs]
-        return [
-            _ARROW_SCHEMA.empty_table() if s is None else s.to_table(filter=keep)
-            for s in stored
-        ]
+        for part_dir, listed in [(d, _listing(d)) for d in dirs]:
+            times, values = _CACHE.read(part_dir, listed or [], lo, hi, max_points)
+            out.append(
+                pa.table(
+                    [pa.array(times.view("datetime64[us]")), values],
+                    schema=_ARROW_SCHEMA,
+                )
+            )
+    return out
 
 
 def recover_swaps(root: str) -> None:
@@ -266,9 +439,12 @@ def apply_retention(
     not exist yet.
     """
     entry = series_entry(name)
-    stored = _listing(os.path.join(table_path, entry))
-    if stored is None:
+    listed = _listing(os.path.join(table_path, entry))
+    if listed is None:
         return 0
+    stored = ds.dataset(
+        [path for path, _, _ in listed], schema=_ARROW_SCHEMA, format="parquet"
+    )
     keep = None
     if age_seconds is not None:
         keep = ds.field("time") >= retention_cutoff(age_seconds, now_epoch)
