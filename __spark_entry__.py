@@ -414,10 +414,6 @@ def q23_doc_profile(spark, sf):
     )
 
 
-def q25_lang_guess(spark, sf):  # kept for bench/pytest; folded into q18
-    return text.lang_guess(_t(spark, sf, "documents"))
-
-
 def q28_ngram_jaccard(spark, sf):
     # max_df=None: the declared query must stay bit-identical to the
     # exact all-shingles DuckDB oracle; the library DEFAULT is the

@@ -294,6 +294,7 @@ def auth_port(metrics):
     )
     yield server.server_address[1]
     server.shutdown()
+    server.server_close()
 
 
 def test_http_end_to_end(auth_port):
@@ -334,6 +335,7 @@ def test_stubs(metrics):
             assert _post(port, stub, {"key": "host"}) == (200, [])
     finally:
         server.shutdown()
+        server.server_close()
 
 
 def _raw_status(port, content_length):
@@ -359,6 +361,7 @@ def test_content_length_bounded(metrics):
         assert _raw_status(port, str(MAX_BODY_BYTES + 1)) == 413
     finally:
         server.shutdown()
+        server.server_close()
 
 
 @pytest.fixture(scope="module")
@@ -366,6 +369,7 @@ def port(metrics):
     server, _ = serve(metrics, {"cpu", "mem"})
     yield server.server_address[1]
     server.shutdown()
+    server.server_close()
 
 
 @pytest.mark.parametrize(
@@ -469,6 +473,7 @@ def test_query_times_are_utc_under_any_session_zone(spark, metrics):
             got = _post(server.server_address[1], "/query", PAYLOAD)
         finally:
             server.shutdown()
+            server.server_close()
     finally:
         spark.conf.set(key, prior)
     assert got[0] == 200

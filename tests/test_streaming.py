@@ -9,6 +9,8 @@ import functools
 import json
 import logging
 import os
+import threading
+import time
 from datetime import datetime
 
 import pytest
@@ -468,27 +470,170 @@ def test_swap_crash_recovered_on_collector_start(spark, tmp_path, monkeypatch):
     assert not os.path.exists(tmp_path / "absent")
 
 
-def test_streaming_smoke(spark, tmp_path):
-    """Real Structured Streaming run: rate source, 1s trigger."""
-    import time
+def test_failed_append_does_not_fail_later_ticks(spark, tmp_path, monkeypatch):
+    """A write that fails once leaves a torn file aside; the next ticks
+    land their samples and return normally, and the file stays hidden
+    until the next collector start removes it."""
+    src = SourceConfig(name="s", interval=1)
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    path = str(tmp_path / "metrics")
 
+    def write_series_file(table, file_path):
+        with open(file_path, "wb") as f:
+            f.write(b"PAR1")  # a torn file, then the disk fills
+        raise OSError("injected write failure")
+
+    monkeypatch.setattr(ingest, "write_series_file", write_series_file)
+    with pytest.raises(OSError, match="injected write failure"):
+        c.tick(tick_time=1_700_000_000)
+    monkeypatch.undo()
+    for t in (1, 2):
+        assert c.tick(tick_time=1_700_000_000 + t) == 1
+    assert len(os.listdir(os.path.join(path, ".swap"))) == 1
+    assert read_metrics(spark, path).count() == 2
+
+    MetricsCollector(spark, [src], path)
+    assert sorted(os.listdir(path)) == ["name=s"]
+    assert read_metrics(spark, path).count() == 2
+
+
+def _until(cond, timeout: float = 20.0) -> bool:
+    """Poll ``cond`` until it holds or ``timeout`` seconds pass."""
+    deadline = time.monotonic() + timeout
+    while not cond():
+        if time.monotonic() > deadline:
+            return False
+        time.sleep(0.05)
+    return True
+
+
+def _count_ticks(c: MetricsCollector) -> dict[str, int]:
+    """Shadow ``c.tick`` with a wrapper counting started and finished
+    ticks (the clock thread calls ``self.tick``)."""
+    n = {"started": 0, "finished": 0}
+    real = c.tick
+
+    def tick(*args):
+        n["started"] += 1
+        try:
+            return real(*args)
+        finally:
+            n["finished"] += 1
+
+    c.tick = tick
+    return n
+
+
+def test_started_collector_lands_samples_without_a_stream(spark, tmp_path):
+    """``start`` ticks on a driver thread: samples land, and no
+    Structured Streaming query runs meanwhile."""
+    before = [q.id for q in spark.streams.active]
     src = SourceConfig(name="live", interval=1)
     c, _ = _collector(spark, tmp_path, [src], {"live": json.dumps({"count": 5.0})})
-    q = c.run_streaming(
-        trigger_seconds=1, checkpoint_dir=str(tmp_path / "ckpt")
-    )
+    path = str(tmp_path / "metrics")
+    streams: list[list[str]] = []
+
+    def landed() -> bool:
+        streams.append([q.id for q in spark.streams.active])
+        return os.path.isdir(path) and read_metrics(spark, path).count() >= 2
+
+    c.start(0.2)
     try:
-        deadline = time.time() + 20
-        while time.time() < deadline:
-            try:
-                if read_metrics(spark, str(tmp_path / "metrics")).count() >= 2:
-                    break
-            except Exception:
-                pass
-            time.sleep(0.5)
+        assert _until(landed)
     finally:
-        q.stop()
-    assert read_metrics(spark, str(tmp_path / "metrics")).count() >= 2
+        c.stop()
+    assert all(ids == before for ids in streams)
+
+
+def test_idle_collector_writes_nothing(spark, tmp_path):
+    """With no source due, about 1 s of ticks fetches nothing and
+    writes nothing anywhere under the test's directory."""
+    src = SourceConfig(name="idle", interval=3600)
+    c, calls = _collector(spark, tmp_path, [src], {"idle": "{}"})
+    c.state["idle"].last_run = time.time()
+    n = _count_ticks(c)
+    c.start(0.2)
+    try:
+        time.sleep(1.0)
+    finally:
+        c.stop()
+    assert n["finished"] >= 2
+    assert calls == []
+    assert os.listdir(tmp_path) == []
+
+
+def test_stop_waits_for_the_tick_in_progress(spark, tmp_path):
+    """``stop`` returns after the running tick has landed its sample,
+    and no tick starts after it."""
+    fetching = threading.Event()
+
+    def fetcher(src: SourceConfig) -> str:
+        fetching.set()
+        time.sleep(0.3)
+        return json.dumps({"count": 1.0})
+
+    path = str(tmp_path / "metrics")
+    c = MetricsCollector(
+        spark, [SourceConfig(name="s", interval=3600)], path, fetcher=fetcher
+    )
+    n = _count_ticks(c)
+    c.start(0.05)
+    assert fetching.wait(20)
+    c.stop()
+    assert n["started"] == n["finished"] >= 1
+    assert read_metrics(spark, path).count() == 1
+    time.sleep(0.3)
+    assert n["started"] == n["finished"]
+    assert not c._clock.is_alive()
+
+
+def test_source_at_the_trigger_interval_fires_every_tick(spark, tmp_path):
+    """Ticks start ``trigger_seconds`` apart on the collector's clock,
+    so a source with that interval is due on each one."""
+    src = SourceConfig(name="s", interval=0.2)
+    c, calls = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    n = _count_ticks(c)
+    c.start(0.2)
+    try:
+        assert _until(lambda: n["finished"] >= 4)
+    finally:
+        c.stop()
+    assert len(calls) == n["finished"]
+    assert read_metrics(spark, str(tmp_path / "metrics")).count() == len(calls)
+
+
+def test_failed_tick_is_logged_and_the_clock_goes_on(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """A tick that raises is logged at ERROR; the next ticks still land
+    their samples past the torn file it left aside, and log nothing."""
+    caplog.set_level(logging.ERROR, logger=ingest.__name__)
+    src = SourceConfig(name="s", interval=0.2)
+    c, _ = _collector(spark, tmp_path, [src], {"s": json.dumps({"count": 1.0})})
+    path = str(tmp_path / "metrics")
+    real = ingest.write_series_file
+    failed: list[str] = []
+
+    def write_series_file(table, file_path):
+        if not failed:
+            failed.append(file_path)
+            with open(file_path, "wb") as f:
+                f.write(b"PAR1")
+            raise OSError("injected write failure")
+        real(table, file_path)
+
+    monkeypatch.setattr(ingest, "write_series_file", write_series_file)
+    c.start(0.2)
+    try:
+        assert _until(
+            lambda: os.path.isdir(os.path.join(path, "name=s"))
+            and read_metrics(spark, path).count() >= 2
+        )
+    finally:
+        c.stop()
+    errors = [r for r in caplog.records if r.name == ingest.__name__]
+    assert [r.levelno for r in errors] == [logging.ERROR]
+    assert "injected write failure" in caplog.text
 
 
 def test_collector_replay_matches_hand_trace(spark, tmp_path):

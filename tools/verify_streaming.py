@@ -2,8 +2,8 @@
 """End-to-end live drive of the reference's full loop (VERDICT r1 #8):
 
     fake HTTP metric endpoints
-      -> MetricsCollector.run_streaming (real Structured Streaming,
-         rate source, 1 s trigger — reference index.js:225-284)
+      -> MetricsCollector.start (one driver thread ticking every
+         1 s — reference index.js:225-284)
       -> parquet metrics table partitioned by name (with one source's
          retention firing mid-run, index.js:268-282)
       -> serving.http_server over a real socket with Basic Auth
@@ -112,13 +112,12 @@ def main() -> int:
         SourceConfig(name="mem", interval=2, url=f"{base}/mem"),
         SourceConfig(name="flaky", interval=1, url=f"{base}/flaky"),
         # retention fires mid-run: age 8 s checked every 3 s. The age
-        # must exceed the WORST-CASE micro-batch latency on a loaded
-        # host (observed 6 s under contention): with age < tick
-        # latency, a retention pass can transiently delete every row
-        # before the next append lands, and the harness times out
-        # waiting to observe survivors — a scheduling artifact, not an
-        # engine defect (the pruning assertion only needs min(time) to
-        # move, which age 8 s still proves).
+        # must exceed the worst-case tick latency on a loaded host:
+        # with age < tick latency, a retention pass can transiently
+        # delete every row before the next append lands, and the
+        # harness times out waiting to observe survivors — a scheduling
+        # artifact, not an engine defect (the pruning assertion only
+        # needs min(time) to move, which age 8 s still proves).
         SourceConfig(
             name="cpu_retained",
             interval=1,
@@ -129,17 +128,9 @@ def main() -> int:
         SourceConfig(name="ghost", active=False, interval=1, url=f"{base}/cpu"),
     ]
 
-    # warm the JVM + parquet writer path so the first micro-batch does
-    # not eat 9 s of the run (observed cold-start on this container)
-    spark.createDataFrame([("warm", 0.0)], "name string, value double").write.mode(
-        "overwrite"
-    ).parquet(str(tmp / "warm"))
-
     print(f"== stage 1: streaming collect (1 s trigger, up to {RUN_SECONDS} s)")
     collector = MetricsCollector(spark, sources, table)
-    query = collector.run_streaming(
-        trigger_seconds=1, checkpoint_dir=str(tmp / "ckpt")
-    )
+    collector.start(trigger_seconds=1)
     def table_stats() -> dict[str, tuple[int, object]]:
         # the table dir only exists after the first tick's write; a
         # read during a retention swap can miss the series between the
@@ -158,9 +149,7 @@ def main() -> int:
 
     # run until the interesting state is OBSERVED (≥3 ticks, and
     # retention has pruned cpu_retained's oldest rows while keeping
-    # survivors) rather than sleeping a fixed time: a fixed stop can
-    # interrupt mid-tick between a retention pass and its append,
-    # making the final counts an artifact of stop timing
+    # survivors) rather than sleeping a fixed time
     deadline = time.time() + RUN_SECONDS
     stats: dict[str, tuple[int, object]] = {}
     while time.time() < deadline:
@@ -176,25 +165,22 @@ def main() -> int:
         ):
             break
         time.sleep(2)
-    query.stop()
-    query.awaitTermination(30)
-    # assert on the OBSERVED loop state, not a post-stop re-read: a tick
-    # interrupted by stop() may have completed its retention pass but
-    # not its append, which would make final counts stop-timing noise
+    # stop() waits out the tick in progress; the checks below use the
+    # state observed above
+    collector.stop()
 
     rows = sum(v[0] for v in stats.values())
     by_name = {k: v[0] for k, v in stats.items()}
     print(f"  collected {rows} samples: {by_name}")
-    # host contention makes the exact tick count unpredictable (the
-    # cold run saw micro-batches fall behind by seconds); assert the
-    # cadence CONTRACT, not wall-clock throughput
+    # host contention makes the exact tick count unpredictable; assert
+    # the cadence CONTRACT, not wall-clock throughput
     check("multiple ticks ran", by_name.get("cpu", 0) >= 3, f"{rows} rows")
     check(
         "mem interval=2 polls <= cpu interval=1",
         0 < by_name.get("mem", 0) <= by_name.get("cpu", 0),
     )
     check(
-        "flaky isolation: some succeed, job alive",
+        "flaky isolation: some succeed, collector alive",
         0 < by_name.get("flaky", 99) < by_name.get("cpu", 0) + 2,
     )
     check("inactive source never polled", "ghost" not in by_name)
